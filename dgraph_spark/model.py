@@ -134,6 +134,9 @@ class Graph:
 
     # ------------------------------------------------------------- mutation-ish
     def with_pred(self, name: str, df: DataFrame, meta: Predicate | None = None) -> "Graph":
+        """A new version with ``name`` replaced. It shares this version's
+        schema registry: writers copy the registry once per new version
+        (mutations._own_schema) before touching it."""
         preds = dict(self.preds)
         preds[name] = df
         schema = self.schema

@@ -18,6 +18,8 @@ SURVEY.md §1.5). Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import copy as _copy
+import dataclasses as _dc
 import re as _re
 
 from dataclasses import dataclass
@@ -27,12 +29,22 @@ from pyspark.sql import functions as F
 
 from dgraph_spark.model import OBJECT, SUBJECT, VALUE, Graph
 from dgraph_spark.schema import Predicate
-from dgraph_spark.sources.rdf import parse_nquads
+from dgraph_spark.sources.rdf import _NQUAD_RE, parse_nquads
 
 
 def _triples_from_nquads(graph: Graph, nquads: str) -> DataFrame:
     lines = graph.spark.createDataFrame([(l,) for l in nquads.splitlines() if l.strip()], "value string")
     return parse_nquads(lines)
+
+
+def _check_nquads(nquads: str) -> None:
+    """Reject a mutation with a line parse_nquads would silently drop
+    (bulk loads keep that chunker behavior; a mutation must not lose
+    quads). The check runs on the driver with the same regex — no job."""
+    for line in nquads.splitlines():
+        t = line.strip()
+        if t and not t.startswith("#") and not _re.match(_NQUAD_RE, line):
+            raise ValueError(f"invalid N-Quad in mutation: {t!r}")
 
 
 # predicates whose VALUES only dgraph's graphql admin may write
@@ -60,6 +72,13 @@ def _guard_reserved_preds(graph: Graph, pred_names: list[str]) -> None:
                 "internal types/predicates.")
 
 
+def _own_schema(graph: Graph) -> Graph:
+    """`graph` with its own copy of the schema registry, for a writer to
+    build the next version on: new predicates and first-touch defaults
+    (SchemaRegistry.get) must not leak into the version written from."""
+    return _dc.replace(graph, schema=_copy.deepcopy(graph.schema))
+
+
 def set_triples(graph: Graph, triples: DataFrame) -> Graph:
     """Apply set-mutations (long-format triples DF as from parse_nquads).
     Returns a new Graph.
@@ -75,7 +94,7 @@ def set_triples(graph: Graph, triples: DataFrame) -> Graph:
     """
     from dgraph_spark.sources.rdf import graph_from_triples
 
-    g = graph
+    g = _own_schema(graph)
     pred_names = [r["predicate"] for r in triples.select("predicate").distinct().collect()]
     _guard_reserved_preds(g, pred_names)
     if g.schema.strict and "lang" in triples.columns:
@@ -172,8 +191,6 @@ def drop_attr(graph: Graph, pred: str) -> Graph:
             f"predicate {pred} is pre-defined and is not allowed to be "
             "dropped")
     preds = {k: v for k, v in graph.preds.items() if k != pred}
-    import copy as _copy
-
     schema = _copy.deepcopy(graph.schema)
     schema.predicates.pop(pred, None)
     for t, ps in schema.types.items():
@@ -190,8 +207,6 @@ def drop_type(graph: Graph, type_name: str) -> Graph:
         raise ValueError(
             f"type {type_name} is pre-defined and is not allowed to be "
             "dropped")
-    import copy as _copy
-
     schema = _copy.deepcopy(graph.schema)
     schema.types.pop(type_name, None)
     return Graph(spark=graph.spark, preds=dict(graph.preds), schema=schema,
@@ -204,8 +219,6 @@ def drop_data(graph: Graph) -> Graph:
     (edgraph/server.go:432-465). Each predicate keeps its ORIGINAL
     column set (lang/facets included) so @lang / @facets queries on the
     emptied graph still analyze — they just return no rows."""
-    import copy as _copy
-
     preds = {name: df.limit(0) for name, df in graph.preds.items()}
     # wide tables hold real rows: empty them too (schema kept), and keep
     # the pred_home/edge_homes routing consistent with the emptied wides.
@@ -400,7 +413,7 @@ def delete_triples(graph: Graph, triples: DataFrame) -> Graph:
     """Apply delete-mutations. A row with NULL object_uid AND NULL
     value_str (parsed from `* `) deletes every value of (subject, pred).
     """
-    g = graph
+    g = _own_schema(graph)
     pred_names = [r["predicate"] for r in triples.select("predicate").distinct().collect()]
     for name in pred_names:
         if not g.has_pred(name):
@@ -434,9 +447,12 @@ def delete_triples(graph: Graph, triples: DataFrame) -> Graph:
     return g
 
 
+def _star_object(nquads: str) -> str:
+    return nquads.replace(" * .", ' "*" .')  # normalize wildcard object
+
+
 def delete_nquads(graph: Graph, nquads: str) -> Graph:
-    nq = nquads.replace(" * .", ' "*" .')  # normalize wildcard object
-    return delete_triples(graph, _triples_from_nquads(graph, nq))
+    return delete_triples(graph, _triples_from_nquads(graph, _star_object(nquads)))
 
 
 def mutate(graph: Graph, mutation_text: str) -> Graph:
@@ -445,8 +461,11 @@ def mutate(graph: Graph, mutation_text: str) -> Graph:
         { set { <nquads> } delete { <nquads> } }
 
     (dql/parser_mutation.go:15 ParseMutation surface; both sections
-    optional, either order)."""
+    optional, either order). A line that is not one well-formed N-Quad
+    raises ValueError naming it; nothing is written."""
     set_nq, del_nq = _split_mutation_blocks(mutation_text)
+    _check_nquads(set_nq)
+    _check_nquads(_star_object(del_nq))
     g = graph
     if set_nq.strip():
         g = set_nquads(g, set_nq)

@@ -12,12 +12,17 @@ Mirrors the reference's execution lifecycle (SURVEY.md §3.1) Spark-first:
     (worker/sort.go, query/query.go:2493 applyPagination).
   - @cascade defers pagination until after pruning
     (query/query.go:3004-3011).
-  - Nested JSON output: bottom-up collect_list(struct(...)) assembly —
-    the distributed analogue of query/outputnode.go's fastJsonNode tree.
 
 Two result modes:
-  - execute()      -> dgraph-shaped nested dict (golden-testable)
-  - execute_flat() -> flat DataFrame per block (oracle/hash-checkable)
+  - execute()      -> dgraph-shaped nested dict (golden-testable). A block
+    runs one level at a time, like query/query.go ProcessGraph: each
+    level's edge rows are collected once, and its uid set feeds the
+    next level's scans — as a literal `subject IN (...)` filter while it
+    has at most LITERAL_FRONTIER_MAX uids, through a semi-join against
+    the level's relation above that. The JSON is then encoded on the
+    driver from those per-level rows (query/outputnode.go ToJson).
+  - execute_flat() -> flat DataFrame per block (oracle/hash-checkable):
+    lineage joins, one Spark plan per block.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from __future__ import annotations
 import itertools
 import json
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Window
@@ -53,6 +59,28 @@ PATH = "_path"
 # joins; larger frontiers degrade to shuffle joins instead of OOMing the
 # executors (same cap as operators/dedup.py).
 BROADCAST_ROW_CAP = 2_000_000
+
+# execute(): a collected level uid set of at most this many uids reaches
+# the next level's scans as a literal `subject IN (...)` filter (one scan
+# job, pushed into parquet on wide tables); a larger one semi-joins the
+# level's own relation. Measured on the sf0.1 fixture (4 cores): the
+# literal form wins clearly up to 1000 uids a level, and the two cross
+# between 1500 and 3000, where the IN list's planning cost catches up.
+LITERAL_FRONTIER_MAX = 1000
+
+# uid output format, the one rendering of a uid (query/outputnode.go):
+# 0x-hex of the unsigned 64-bit uid. Java's %x renders a negative long
+# as its two's complement, so the driver side masks to 64 bits.
+_UID_FMT = "0x%x"
+_U64 = (1 << 64) - 1
+
+
+def _uid_hex(u: int) -> str:
+    return _UID_FMT % (u & _U64)
+
+
+def _uid_hex_col(c: Column) -> Column:
+    return F.format_string(_UID_FMT, c)
 
 _POSTING_KEY_UDFS: dict = {}
 
@@ -145,6 +173,16 @@ class Level:
     # duplicated parent-lineage subtree it would replan. Returns None
     # on column-name collisions (caller falls back to the join).
     edge_rebuild: "callable | None" = None
+    # execute() only: the level's collected edge rows (dicts with _dst,
+    # _rank, [_src], [facets], [_a_* in-row columns]), and — when at most
+    # LITERAL_FRONTIER_MAX — its distinct uids plus a literal relation of
+    # them, which _nodes() then returns
+    rows: list[dict] | None = None
+    uids: list[int] | None = None
+    nodes: DataFrame | None = None
+    # (attr, row key) of attrs a fused root collected with its rows
+    row_attrs: list = field(default_factory=list)
+    depth: int = 0
 
 
 class Executor:
@@ -200,6 +238,8 @@ class Executor:
         self._blocks_run = 0
         self.var_kind = {}
         self.var_inrow = {}
+        # alias of the block execute() is encoding (job descriptions)
+        self._block_alias = None
         # value vars whose lexical strings are 200-bit bigfloats: math,
         # aggregation, ordering and rendering route through
         # functions/bigfloat.py instead of native column arithmetic
@@ -208,14 +248,8 @@ class Executor:
     # ================================================================ public
     def execute(self, query: str | ParsedQuery, vars: dict | None = None) -> dict:
         """Run a full DQL query; returns {block_alias: [node dicts...]}."""
-        self._reset_query_state()
-        pq = parse_dql(query, vars) if isinstance(query, str) else query
-        for b in pq.blocks:
-            _validate_block_tree(b)
-            _propagate_cascade(b)
-        self._consumed_vars = set().union(set(), *(_block_needs(b) for b in pq.blocks))
         out: dict[str, list] = {}
-        for block in self._schedule(pq.blocks):
+        for block in self._scheduled(query, vars):
             if block.is_schema:
                 if block.schema_types:
                     t = self._schema_types_json(block)
@@ -223,19 +257,35 @@ class Executor:
                         out["types"] = t
                 else:
                     out["schema"] = self._schema_json(block)
-                continue
-            if block.is_var_block:
-                before = frozenset(self.env)
-                self._run_block(block)
-                self._truncate_new_vars(before)
-                continue
-            before = frozenset(self.env)
-            result = self._block_json(block)
-            self._truncate_new_vars(before)
-            if result is not None:
+            elif block.is_var_block:
+                self._tracked(self._run_block, block)
+            elif (result := self._tracked(self._block_json, block)) is not None:
                 out[block.alias] = result
         return out
 
+    def _scheduled(self, query: str | ParsedQuery, vars: dict | None,
+                   rdf: bool = False) -> list[Block]:
+        """The one block driver of execute/execute_flat/execute_rdf:
+        reset the per-query state, parse, validate and propagate
+        @cascade, collect the vars other blocks consume, and return the
+        blocks in dependency order."""
+        self._reset_query_state()
+        pq = parse_dql(query, vars) if isinstance(query, str) else query
+        if rdf:
+            for b in pq.blocks:
+                self._rdf_validate(b)
+        for b in pq.blocks:
+            _validate_block_tree(b)
+            _propagate_cascade(b)
+        self._consumed_vars = set().union(set(), *(_block_needs(b) for b in pq.blocks))
+        return self._schedule(pq.blocks)
+
+    def _tracked(self, run, block: Block):
+        """``run(block)``, then truncate the lineage of the vars it bound."""
+        before = frozenset(self.env)
+        result = run(block)
+        self._truncate_new_vars(before)
+        return result
 
     # blocks executed before var lineage-truncation kicks in: short
     # queries (1-2 blocks) keep full plan fusion; deep chains get flat
@@ -304,28 +354,11 @@ class Executor:
                      vars: dict | None = None) -> DataFrame:
         """Run a query, return ONE block's result as a flat DataFrame
         (lineage joins; aliased scalar columns). Used by the oracle gate."""
-        self._reset_query_state()
-        pq = parse_dql(query, vars) if isinstance(query, str) else query
-        for b in pq.blocks:
-            _validate_block_tree(b)
-            _propagate_cascade(b)
-        self._consumed_vars = set().union(set(), *(_block_needs(b) for b in pq.blocks))
-        target = None
-        for block in self._schedule(pq.blocks):
-            if block.is_var_block:
-                before = frozenset(self.env)
-                self._run_block(block)
-                self._truncate_new_vars(before)
-                continue
-            if block_alias is None or block.alias == block_alias:
-                target = block
-                break
-            before = frozenset(self.env)
-            self._run_block(block)  # still run (may define vars)
-            self._truncate_new_vars(before)
-        if target is None:
-            raise KeyError(f"block {block_alias!r} not found")
-        return self._block_flat(target)
+        for block in self._scheduled(query, vars):
+            if not block.is_var_block and block_alias in (None, block.alias):
+                return self._block_flat(block)
+            self._tracked(self._run_block, block)  # still run (may define vars)
+        raise KeyError(f"block {block_alias!r} not found")
 
     # =========================================================== RDF output
     def execute_rdf(self, query: str | ParsedQuery, vars: dict | None = None) -> str:
@@ -337,25 +370,14 @@ class Executor:
         quoting (ints/floats quoted, bools bare, strings JSON-escaped,
         datetimes RFC3339). Unsupported directives raise the reference's
         exact error strings (outputrdf.go validateSubGraphForRDF)."""
-        self._reset_query_state()
-        pq = parse_dql(query, vars) if isinstance(query, str) else query
-        for b in pq.blocks:
-            self._rdf_validate(b)
-        for b in pq.blocks:
-            _validate_block_tree(b)
-            _propagate_cascade(b)
-        self._consumed_vars = set().union(
-            set(), *(_block_needs(b) for b in pq.blocks))
         lines: list[str] = []
-        for block in self._schedule(pq.blocks):
+        for block in self._scheduled(query, vars, rdf=True):
             if block.is_schema:
                 continue
             if block.shortest is not None:
                 self._run_shortest(block)  # binds path vars; no RDF body
                 continue
-            before = frozenset(self.env)
-            level = self._run_block(block)
-            self._truncate_new_vars(before)
+            level = self._tracked(self._run_block, block)
             if level is not None:
                 self._rdf_emit(level, lines)
         return "".join(lines)
@@ -499,8 +521,10 @@ class Executor:
         return ordered
 
     # ========================================================== block driver
-    def _run_block(self, block: Block) -> Level | None:
-        """Execute one top-level block tree, registering variables."""
+    def _run_block(self, block: Block, collect: bool = False) -> Level | None:
+        """Execute one top-level block tree, registering variables.
+        ``collect``: materialize every level on the driver as it is
+        reached (execute()'s level-at-a-time mode, see _collect_level)."""
         if block.shortest is not None:
             return self._run_shortest(block)
         frontier = self._root_frontier(block)
@@ -510,7 +534,7 @@ class Executor:
                 # side effects (env registration), discard the JSON
                 self._agg_only_json(block)
             return None
-        level = self._descend(block, frontier, root=True)
+        level = self._descend(block, frontier, root=True, collect=collect)
         if level is not None and _has_cascade(block):
             # the reference prunes the subgraph BEFORE variable assignment
             # (query.go Process: applyCascade then valueVarAggregation) —
@@ -700,19 +724,21 @@ class Executor:
     # ============================================================== descent
     def _descend(self, block: Block, frontier: DataFrame, root: bool,
                  parent: "Level | None" = None,
-                 dst_unique: bool = False) -> Level:
+                 dst_unique: bool = False, collect: bool = False) -> Level:
         """frontier: DataFrame with column _dst (+ _src when child level).
 
         Applies sort/pagination (unless deferred for cascade), registers
-        block-level uid var, recurses into children.
+        block-level uid var, recurses into children. A level is collected
+        before its children descend when ``collect`` (root) or its parent
+        was collected.
         """
         if block.recurse is not None:
             return self._descend_recurse(block, frontier)
 
         subtree_cascade = _has_cascade(block)
-        level = Level(block=block, edges=frontier, defer_pagination=subtree_cascade)
-        level.parent = parent
-        level.dst_unique = dst_unique
+        level = Level(block=block, edges=frontier, defer_pagination=subtree_cascade,
+                      parent=parent, dst_unique=dst_unique,
+                      depth=0 if parent is None else parent.depth + 1)
 
         # facet variables @facets(w as weight): registered BEFORE any
         # child descends so math() at this or deeper levels can resolve
@@ -751,6 +777,9 @@ class Executor:
             self.var_level[block.var] = level
             self.var_kind[block.var] = "block"
 
+        if block.groupby is None and (
+                collect if parent is None else parent.rows is not None):
+            self._collect_level(level, root)
         nodes = self._nodes(level)
 
         # groupby blocks: no recursion below (aggregates only)
@@ -787,7 +816,7 @@ class Executor:
         if attr.expand == "_all_":
             types = [
                 r[VALUE]
-                for r in nodes.join(self.g.node_types(), SUBJECT, "inner")
+                for r in self._restrict(nodes, self.g.node_types(), level)
                 .select(VALUE).distinct().collect()
             ]
             preds: list[str] = []
@@ -902,8 +931,7 @@ class Executor:
                 )
             )
         else:
-            parent_uids = self._nodes(parent)
-            ch = parent_uids.join(edges, SUBJECT, "inner").select(
+            ch = self._restrict(self._nodes(parent), edges, parent).select(
                 F.col(SUBJECT).alias(SRC), F.col(OBJECT).alias(DST), *facet_cols,
             )
 
@@ -1033,7 +1061,7 @@ class Executor:
                 for var, key in attr.facets.vars.items():
                     texpr, tagg, _tk = self._typed_facet(e, key)
                     self.env[var] = (
-                        nodes.join(e, SUBJECT, "inner")
+                        self._restrict(nodes, e, level)
                         .select(F.col(OBJECT).alias(SUBJECT),
                                 texpr.alias(VALUE))
                         .where(F.col(VALUE).isNotNull())
@@ -1056,7 +1084,7 @@ class Executor:
             # targets (query/query.go:1550 populateUidValVar uid case);
             # nothing renders, but uid(B) roots/filters read it
             e = self.g.edge(base, reverse=attr.name.startswith("~"))
-            tgt = nodes.join(e, SUBJECT, "inner")
+            tgt = self._restrict(nodes, e, level)
             self.env[attr.var] = tgt.select(F.col(OBJECT).alias(SUBJECT)).distinct()
             self.var_edges[attr.var] = tgt.select(
                 F.col(SUBJECT).alias(SRC), F.col(OBJECT).alias(DST))
@@ -1105,7 +1133,8 @@ class Executor:
             if attr.name in _AGG_ATTRS:
                 self.var_agg[attr.var] = attr.name
 
-    def _count_per_parent(self, attr: Attr, nodes: DataFrame, out: str) -> DataFrame:
+    def _count_per_parent(self, attr: Attr, nodes: DataFrame, out: str,
+                          level: Level | None = None) -> DataFrame:
         """(subject, out) per-parent count of `attr`'s edge/posting set —
         the shared kernel for BOTH output counts and `v as count(p)` value
         vars, so @filter / @facets / pagination / @lang rules agree
@@ -1115,12 +1144,15 @@ class Executor:
         reverse = pred.startswith("~")
         name = pred.lstrip("~")
         fspec = attr.facets
+        uids = self._literal_uids(nodes, level)
         if not reverse and not self.g.schema.get(name).is_uid:
             # count(scalar-pred): posting-list length of a value
             # predicate, 0 when absent (worker/task.go count postings).
             # On a @lang pred only the UNTAGGED postings count — same
             # rule as fetching `name` without a lang directive
             sdf = self.g.scalar(name)
+            if uids is not None:
+                sdf = sdf.where(_isin(SUBJECT, uids))
             if "lang" in sdf.columns:
                 sdf = sdf.where(F.col("lang").isNull())
             if fspec is not None and fspec.filter is not None:
@@ -1133,6 +1165,8 @@ class Executor:
             return nodes.join(per, SUBJECT, "left").select(
                 SUBJECT, F.coalesce(F.col("_c"), F.lit(0)).alias(out))
         edges = self.g.edge(name, reverse=reverse)
+        if uids is not None:
+            edges = edges.where(_isin(SUBJECT, uids))
         if fspec is not None and fspec.filter is not None:
             edges = (edges.where(self._facet_cond(fspec.filter))
                      if FACETS in edges.columns else edges.where(F.lit(False)))
@@ -1198,7 +1232,7 @@ class Executor:
                 return nodes.select(SUBJECT, F.lit(0).cast("long").alias(VALUE))
             # shared kernel with output counts: @filter / @facets /
             # pagination / @lang all apply to `v as count(p)` too
-            return self._count_per_parent(attr, nodes, VALUE)
+            return self._count_per_parent(attr, nodes, VALUE, level)
         if attr.val_var is not None and attr.name == "val":
             return self.env[attr.val_var]
         if attr.name in _AGG_ATTRS and attr.val_var:
@@ -1254,10 +1288,10 @@ class Executor:
                         SUBJECT, F.col(c).alias(VALUE)
                     )
                 wdf = self.g.wide[hname].select(SUBJECT, F.col(c).alias(VALUE))
-                return nodes.join(wdf, SUBJECT, "inner").select(SUBJECT, VALUE)
+                return self._restrict(nodes, wdf, level).select(SUBJECT, VALUE)
             df = self.g.scalar(attr.name)
             df = self._lang_select(df, attr.langs)
-            return nodes.join(df, SUBJECT, "inner").select(SUBJECT, VALUE)
+            return self._restrict(nodes, df, level).select(SUBJECT, VALUE)
         if attr.var and not self.g.has_pred(attr.name):
             # `v as unknown_pred`: the var exists but is EMPTY — consumers
             # see no values, not an unbound-variable error
@@ -1346,8 +1380,8 @@ class Executor:
                 return nodes.select(
                     SUBJECT, F.lit(None).cast("string").alias(VALUE))
             udf = bigfloat_math_udf(attr.math)
-            out = (nodes.join(resolved.select(SUBJECT, VALUE), SUBJECT,
-                              "inner")
+            out = (self._restrict(nodes, resolved.select(SUBJECT, VALUE),
+                                  level)
                    .select(SUBJECT, udf(F.col(VALUE)).alias(VALUE)))
             if attr.var:
                 self.var_bigfloat.add(attr.var)
@@ -1544,10 +1578,13 @@ class Executor:
         raise ValueError(tree.op)
 
     # ===================================================== sort / pagination
-    def _sort_paginate(self, block: Block, edges: DataFrame, root: bool) -> DataFrame:
+    def _sort_paginate(self, block: Block, edges: DataFrame, root: bool,
+                       paginate: bool = True) -> DataFrame:
         """Per-parent (or global at root) sort + first/offset/after
         (worker/sort.go; query/query.go:2493 applyPagination).
-        Always emits a _rank column for stable nested-array ordering."""
+        Always emits a _rank column for stable nested-array ordering.
+        ``paginate=False`` ranks without applying first/offset (the
+        driver pages the rows after @cascade pruning, _page_rows)."""
         has_page = block.first is not None or block.offset is not None or block.after is not None
         has_order = bool(block.order) or (block.facets and block.facets.order)
 
@@ -1570,7 +1607,7 @@ class Executor:
                 # pagination, compile to orderBy().limit() instead
                 # (TakeOrderedAndProject: per-partition top-k then merge);
                 # otherwise two-phase distributed rank.
-                if has_page and first is not None and first >= 0:
+                if paginate and has_page and first is not None and first >= 0:
                     edges2 = edges2.orderBy(*sort_cols).limit(offset + first)
                     # post-limit set is <= first+offset rows: a plain
                     # window here is over already-tiny data
@@ -1587,7 +1624,7 @@ class Executor:
             rank_src = F.col("_frank") if "_frank" in edges2.columns else F.col(DST)
             edges2 = edges2.withColumn(RANK, rank_src)
 
-        if has_page and (first is not None or offset):
+        if paginate and has_page and (first is not None or offset):
             if first is not None and first < 0:
                 # negative first = last N; offset is IGNORED in this
                 # branch (x/x.go PageRange returns early when count < 0)
@@ -1756,7 +1793,7 @@ class Executor:
         as a rolling hash column; the Level tree for JSON assembly is
         reconstructed from the collected (parent, pred, branch) triples
         and every branch level FILTERS the same materialized per-depth
-        step — the joins in _ascend prune each branch to its own rows.
+        step.
         (Within one round the reference consumes a shared edge under
         whichever branch goroutine wins — nondeterministic there; the
         flat form keeps it under every same-round branch.)"""
@@ -2025,7 +2062,7 @@ class Executor:
                     Window.partitionBy(SRC).orderBy(*okeys)))
             else:
                 e = e.withColumn(RANK, F.col(DST))
-            lvl = Level(block=sub, edges=e)
+            lvl = Level(block=sub, edges=e, depth=d)
             lvl.attr_items = list(round_attrs)
             parent.children.append(lvl)
             level_of[(d, row["_bh"])] = lvl
@@ -2369,14 +2406,14 @@ class Executor:
                 # root {uid, _weight_, <pred>: {uid, <pred|facet>, <pred>: ...}}
                 child = None
                 for j in range(len(uids) - 1, 0, -1):
-                    d = {"uid": f"0x{uids[j]:x}"}
+                    d = {"uid": _uid_hex(uids[j])}
                     wk = wkeys.get(preds[j - 1])
                     if wk is not None and wfs[j - 1] is not None:
                         d[f"{preds[j - 1]}|{wk}"] = wfs[j - 1]
                     if child is not None:
                         d[preds[j]] = child
                     child = d
-                root = {"uid": f"0x{uids[0]:x}", "_weight_": r["dist"]}
+                root = {"uid": _uid_hex(uids[0]), "_weight_": r["dist"]}
                 if child is not None:
                     root[preds[0]] = child
                 out.append(root)
@@ -2384,32 +2421,30 @@ class Executor:
         if block.func is None and not block.is_var_block:
             # aggregation-only block over variables
             return self._agg_only_json(block)
-        level = self._run_block(block)
+        self._block_alias = block.alias
+        level = self._run_block(
+            block, collect=block.groupby is None and not _count_uid_only(block))
         if level is None:
             return []
         if block.groupby is not None:
             return self._groupby_json(level)
         if _count_uid_only(block):
-            # count-at-root fast exit (query/query.go:2278)
-            n = level.edges.select(DST).distinct().count()
+            # count-at-root fast exit (query/query.go:2278); root
+            # frontiers are unique by construction (see _nodes)
+            n = self._nodes(level).count()
             alias = next(
                 (a.alias for a in block.children if isinstance(a, Attr) and a.is_count),
                 None,
             )
             return [{alias or "count": n}]
-        node_payload = self._ascend(level)
-        if node_payload is None:
-            return []
-        edges, payload = node_payload
+        payload = self._encode(level)
+        rows = [r for r in _by_rank(level.rows) if r[DST] in payload]
         if level.defer_pagination:
-            surviving = payload.select(F.col("_pid").alias(DST)).distinct()
-            edges = edges.join(surviving, DST, "left_semi")
-            edges = self._sort_paginate(block, edges, root=True)
-        ordered = edges.join(payload, edges[DST] == payload["_pid"], "inner").orderBy(RANK)
-        rows = [r["_payload"] for r in ordered.select(F.col("_payload")).collect()]
-        out = [_row_to_dict(r) for r in rows if r is not None]
+            # deferred pagination (query/query.go:3004-3011): page the
+            # @cascade survivors
+            rows = self._page_rows(block, rows)
         # nodes with no requested data are omitted (dgraph JSON behavior)
-        out = [d for d in out if d]
+        out = [d for d in (_clean(payload[r[DST]]) for r in rows) if d]
         if block.normalize:
             aliased = _aliased_names(block)
             out = [
@@ -2424,7 +2459,7 @@ class Executor:
         if cnt_attrs:
             # count(uid) beside other attrs: one `{count: n}` node per
             # count child leads the result list (query/outputnode.go)
-            n = edges.select(DST).distinct().count()
+            n = len({r[DST] for r in rows})
             out = [{a.alias or "count": n} for a in cnt_attrs] + out
         bf_tree = self._bigfloat_key_tree(block)
         if bf_tree:
@@ -2611,258 +2646,371 @@ class Executor:
             self.env[var] = self.spark.createDataFrame(
                 [(-1, val)], [SUBJECT, VALUE])
 
-    def _ascend(self, level: Level, skip: set[str] | None = None) -> tuple[DataFrame, DataFrame] | None:
-        """Bottom-up: build (edges, payload) where payload is
-        DataFrame(_pid, _payload struct) for each distinct node at this
-        level. Cascade pruning + deferred pagination happen here.
-        ``skip``: attr out_names the parent supplies in-row off the edge."""
-        skip = skip or set()
-        block = level.block
-        edges = level.edges
-        nodes = self._nodes(level)
+    # ======================================================= level collection
+    def _collect_level(self, level: Level, root: bool) -> None:
+        """Collect one level's edge rows to the driver (execute() only).
 
-        struct_fields: list[Column] = []
-        cascade_checks: list[Column] = []
+        A fused root collects its same-home attribute columns in the same
+        scan (as _block_flat does). A level whose pagination waits for
+        @cascade collects ranked but unpaged rows (_page_rows pages the
+        survivors) and keeps the semi-join frontier, so its children see
+        exactly the node set they would without collection."""
+        block = level.block
+        if level.parent is not None and level.parent.rows == []:
+            level.rows = []  # nothing to expand from: skip the job
+        else:
+            edges = level.edges
+            if level.defer_pagination:
+                edges = self._sort_paginate(block, edges, root, paginate=False)
+            # a fused scan ranks by uid: the root's rank only while the
+            # root has no order (an ordered root keeps _sort_paginate's)
+            if level.fused is not None and not (
+                    block.order or (block.facets and block.facets.order)):
+                home, cond = level.fused
+                batch, _rest = self._split_batchable(
+                    [a for a in block.children
+                     if isinstance(a, Attr) and a.expand is None])
+                items = batch.get(home, [])
+                level.row_attrs = [(a, f"_f{i}") for i, (a, _c) in enumerate(items)]
+                edges = self.g.wide[home].where(cond).select(
+                    F.col(SUBJECT).alias(DST), F.col(SUBJECT).alias(RANK),
+                    *[F.col(c).alias(f"_f{i}") for i, (_a, c) in enumerate(items)])
+            with self._job_desc(level):
+                level.rows = [r.asDict(recursive=True)
+                              for r in edges.drop(PATH).collect()]
+        uids = list(dict.fromkeys(r[DST] for r in level.rows))
+        if len(uids) <= LITERAL_FRONTIER_MAX and not level.defer_pagination:
+            level.uids = uids
+            level.nodes = self._uid_frame(uids)
+
+    def _uid_frame(self, uids: list[int]) -> DataFrame:
+        """A literal (subject) relation: a VALUES table, planned as a local
+        relation (createDataFrame over a list builds a Python RDD instead,
+        measured seconds slower to join)."""
+        if not uids:
+            return self.spark.range(0).select(F.col("id").alias(SUBJECT))
+        vals = ", ".join(f"({u}L)" for u in uids)
+        return self.spark.sql(f"SELECT * FROM VALUES {vals} AS t({SUBJECT})")
+
+    def _literal_uids(self, nodes: DataFrame, level: Level | None) -> list[int] | None:
+        """The uid list behind `nodes` when it is `level`'s literal set."""
+        if level is not None and level.nodes is not None and nodes is level.nodes:
+            return level.uids
+        return None
+
+    def _restrict(self, nodes: DataFrame, df: DataFrame,
+                  level: Level | None) -> DataFrame:
+        """``nodes.join(df, subject)``: a literal `subject IN (...)` filter
+        when `nodes` is the level's collected uid set — one scan job, no
+        join against a local relation (which costs a broadcast job)."""
+        uids = self._literal_uids(nodes, level)
+        if uids is not None:
+            return df.where(_isin(SUBJECT, uids))
+        return nodes.join(df, SUBJECT, "inner")
+
+    def _wide_rel(self, home: str, cols: list[tuple[str, str]],
+                  nodes: DataFrame, level: Level) -> DataFrame:
+        """(subject, out...) rows of a wide node table for `nodes`. A
+        literal uid set filters the raw key column where the home's uids
+        are affine in it (Graph.wide_uid_key), so parquet stats prune."""
+        wide = self.g.wide[home]
+        sel = [F.col(SUBJECT)] + [F.col(c).alias(o) for c, o in cols]
+        uids = self._literal_uids(nodes, level)
+        if uids is None:
+            return nodes.join(wide.select(*sel), SUBJECT, "inner")
+        key = self.g.wide_uid_key.get(home)
+        if key is None:
+            return wide.where(_isin(SUBJECT, uids)).select(*sel)
+        # uids outside the home's range cannot match; leaving them out
+        # keeps the literals in the key column's type, so the filter
+        # still pushes into the parquet scan
+        kcol, base = key
+        lo, hi = self.g.type_uid_ranges.get(home, (-(1 << 63), 1 << 63))
+        keys = [u - base for u in uids if lo <= u < hi]
+        return wide.where(_isin(kcol, keys)).select(*sel)
+
+    @contextmanager
+    def _job_desc(self, level: Level):
+        """Name the Spark jobs of one level "<block alias> L<depth>";
+        the caller's description is restored afterwards."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{self._block_alias} L{level.depth}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    def _page_rows(self, block: Block, rows: list[dict]) -> list[dict]:
+        """first/offset over rank-ordered rows of ONE parent (or the
+        root), after @cascade pruning. Negative first = the last N, with
+        offset ignored (x/x.go PageRange)."""
+        first, offset = block.first, block.offset or 0
+        if first is not None and first < 0:
+            return rows[first:]
+        return rows[offset:] if first is None else rows[offset:offset + first]
+
+    # ========================================================= JSON encoding
+    def _encode(self, level: Level, skip: frozenset = frozenset()) -> dict:
+        """uid -> raw payload dict for every node of a collected level that
+        survives @cascade: the attrs in query order, then one list (or
+        object) per child block — the dicts _clean()/_normalize() render
+        (query/outputnode.go ToJson). ``skip``: attrs the parent supplies
+        per edge from in-row columns. Attribute relations of a level are
+        read in ONE collect (a tagged union) through its node set."""
+        if level.rows is None:
+            self._collect_level(level, root=level.parent is None)  # @recurse rounds
+        block = level.block
         casc = block.cascade  # [] = all children required
 
-        df = nodes
-        # scalar attrs — batched: all plain scalars sharing a wide node
-        # table join in ONE shot (scan fusion), the rest one by one
-        local_cols: dict[str, str] = {}
-        attr_items = [a for a in level.attr_items
-                      if not (isinstance(a, Attr) and a.out_name in skip)]
-        batch, rest = self._split_batchable(attr_items)
+        def required(name, out) -> bool:
+            return casc is not None and (not casc or name in casc or out in casc)
+
+        nodes = self._nodes(level)
+        vals: dict = {r[DST]: {} for r in level.rows}
+        fields: list[str] = []   # payload keys, in query order
+        checks: list[str] = []   # keys @cascade requires non-empty
+        rels: list[tuple[DataFrame, list[str]]] = []
+        local: dict[str, tuple] = {}  # var -> (relation thunk, column)
+        fused = {a.out_name: k for a, k in level.row_attrs}
+        batch, rest = self._split_batchable(
+            [a for a in level.attr_items if a.out_name not in skip])
         for home, items in batch.items():
-            wdf = self.g.wide[home].select(
-                SUBJECT, *[F.col(c).alias(a.out_name) for a, c in items]
-            )
-            df = df.join(wdf, SUBJECT, "left")
-            for a, _c in items:
-                struct_fields.append(_qc(a.out_name))
+            fetch = []
+            for a, c in items:
+                fields.append(a.out_name)
+                if a.out_name in fused:
+                    for r in level.rows:
+                        vals[r[DST]][a.out_name] = r[fused[a.out_name]]
+                else:
+                    fetch.append((c, a.out_name))
                 if a.var:
-                    local_cols[a.var] = a.out_name
-                if casc is not None and (not casc or a.name in casc or a.out_name in casc):
-                    cascade_checks.append(_qc(a.out_name).isNotNull())
-        math_attrs = [a for a in rest if a.math is not None]
-        for attr in (a for a in rest if a.math is None):
+                    local[a.var] = (lambda h=home, c=c, o=a.out_name:
+                                    self._wide_rel(h, [(c, o)], nodes, level),
+                                    a.out_name)
+                if required(a.name, a.out_name):
+                    checks.append(a.out_name)
+            if fetch:
+                rels.append((self._wide_rel(home, fetch, nodes, level),
+                             [o for _c, o in fetch]))
+        for attr in rest:
+            if attr.math is not None:
+                continue
             base = attr.name.lstrip("~")
-            if (not attr.is_count and attr.math is None and attr.val_var is None
+            if (not attr.is_count and attr.val_var is None
                     and self.g.has_pred(base) and self.g.schema.get(base).is_uid):
                 # bodyless uid-pred attr (`B as friend`): renders nothing,
                 # but under @cascade the EDGE must exist
                 # (query/query.go applyCascade counts uid children too)
-                if casc is not None and (not casc or attr.name in casc
-                                         or attr.out_name in casc):
-                    e = (self.g.edge(base, reverse=attr.name.startswith("~"))
-                         .select(SUBJECT).distinct()
-                         .withColumn(f"_has_{attr.out_name}", F.lit(True)))
-                    df = df.join(e, SUBJECT, "left")
-                    cascade_checks.append(_qc(f"_has_{attr.out_name}").isNotNull())
+                if required(attr.name, attr.out_name):
+                    key = f"_has_{attr.out_name}"
+                    e = self.g.edge(base, reverse=attr.name.startswith("~"))
+                    rels.append((self._restrict(nodes, e, level).select(SUBJECT)
+                                 .distinct().withColumn(key, F.lit(True)), [key]))
+                    checks.append(key)
                 continue
-            col_df, out_col, multi = self._attr_output(attr, nodes, level)
+            if attr.name == "uid" and not attr.is_count:
+                out = attr.alias or "uid"
+                for u in vals:
+                    vals[u][out] = _uid_hex(u)
+                fields.append(out)
+                if attr.var:
+                    col_df = self._attr_output(attr, nodes, level)[0]
+                    local[attr.var] = (lambda d=col_df: d, out)
+                continue
+            col_df, out, _multi = self._attr_output(attr, nodes, level)
             if col_df is None:
                 continue
-            df = df.join(col_df, SUBJECT, "left")
-            struct_fields.append(_qc(out_col).alias(out_col))
             # facet sibling columns (`pred|key` / `pred|` map) ride along
-            for extra in col_df.columns:
-                if extra not in (SUBJECT, out_col):
-                    struct_fields.append(_qc(extra))
+            keys = [out] + [c for c in col_df.columns if c not in (SUBJECT, out)]
+            fields.extend(keys)
+            rels.append((col_df, keys))
             if attr.var:
-                local_cols[attr.var] = out_col
-            if casc is not None and (not casc or attr.name in casc or attr.out_name in casc):
-                cascade_checks.append(_qc(out_col).isNotNull())
-        for attr in math_attrs:
+                local[attr.var] = (lambda d=col_df: d, out)
+            if required(attr.name, attr.out_name):
+                checks.append(out)
+        for attr in (a for a in rest if a.math is not None):
             needed = math_vars(attr.math)
-            out_col = attr.out_name if attr.alias else (
-                f"val({attr.var})" if attr.var else "math")
-            if needed <= set(local_cols) and not (needed & self.var_bigfloat):
-                ddt = dict(df.dtypes)
+            if needed <= set(local) and not (needed & self.var_bigfloat):
+                # every operand is an attr of this level: one projection
+                # over the operand columns instead of the var-join plan
+                out = attr.out_name if attr.alias else (
+                    f"val({attr.var})" if attr.var else "math")
+                frame = nodes
+                for v in sorted(needed):
+                    make, col = local[v]
+                    if col not in frame.columns:
+                        frame = frame.join(make().select(SUBJECT, _qc(col)),
+                                           SUBJECT, "left")
+                ddt = dict(frame.dtypes)
                 expr = compile_math(
-                    attr.math, lambda n: _qc(local_cols[n]),
-                    int_var=lambda n: ddt.get(local_cols[n]) == "bigint")
-                dom = [c for n, c in local_cols.items()
+                    attr.math, lambda n: _qc(local[n][1]),
+                    int_var=lambda n: ddt.get(local[n][1]) == "bigint")
+                dom = [c for n, (_m, c) in local.items()
                        if n in needed and n not in self.scalar_vars]
                 if dom:
                     # math domain = union of the regular operand maps
                     # (query/math.go MergeIterate): a node outside every
                     # operand map gets NO value, even though binary ops
                     # skip null operands
-                    present = dom[0] is not None and _qc(dom[0]).isNotNull()
+                    present = _qc(dom[0]).isNotNull()
                     for c in dom[1:]:
                         present = present | _qc(c).isNotNull()
                     expr = F.when(present, expr)
-                df = df.withColumn(out_col, expr)
+                col_df = frame.select(SUBJECT, expr.alias(out))
             else:
-                col_df, out_col, _m = self._attr_output(attr, nodes, level)
+                col_df, out, _m = self._attr_output(attr, nodes, level)
                 if col_df is None:
                     continue
-                df = df.join(col_df, SUBJECT, "left")
-            struct_fields.append(_qc(out_col))
-            if casc is not None and (not casc or attr.name in casc or attr.out_name in casc):
-                cascade_checks.append(_qc(out_col).isNotNull())
+            fields.append(out)
+            rels.append((col_df, [out]))
+            if required(attr.name, attr.out_name):
+                checks.append(out)
+        self._collect_attrs(level, nodes, rels, vals)
 
-        # uid output
-        if any(isinstance(a, Attr) and a.name == "uid" and not a.is_count for a in level.attr_items):
-            pass  # handled via _attr_output
-
-        # child blocks
         used_names: dict[str, int] = {}
         for child in level.children:
-            if child.block.groupby is not None:
+            cb = child.block
+            if cb.groupby is not None:
                 # per-parent @groupby rendered as a one-element child
                 # array [{"@groupby": [...]}] (query/groupby.go:358
                 # processGroupBy per uidMatrix list)
-                grouped, gcols2, gmeta2, acols2 = self._groupby_build(child, per_parent=True)
+                grouped, gcols, gmeta, acols = self._groupby_build(child, per_parent=True)
                 if "_gsrc" not in grouped.columns:
                     continue
-                pp = self._groupby_payload(grouped, gcols2, gmeta2, acols2, True)
-                child_name = child.block.alias if child.block.alias != child.block.attr else (
-                    ("~" if child.block.reverse else "") + child.block.attr
-                )
-                n = used_names.get(child_name, 0)
-                used_names[child_name] = n + 1
-                fname = child_name if n == 0 else f"{child_name}#dgdup{n}"
-                arr = pp.select(
-                    F.col("_gsrc").alias(SUBJECT),
-                    F.array(F.struct(F.col("_g").alias("@groupby"))).alias(fname),
-                )
-                df = df.join(arr, SUBJECT, "left")
-                struct_fields.append(_qc(fname))
+                key = self._child_key(cb, used_names)
+                fields.append(key)
+                pp = self._groupby_payload(grouped, gcols, gmeta, acols, True)
+                with self._job_desc(child):
+                    for r in pp.collect():
+                        if r["_gsrc"] in vals:
+                            vals[r["_gsrc"]][key] = [
+                                {"@groupby": r.asDict(recursive=True)["_g"]}]
                 continue
-            child_inrow = self._inrow_attrs(child)
-            res = self._ascend(child, skip={a.out_name for a, _ in child_inrow})
-            if res is None:
-                continue
-            c_edges, c_payload = res
-            if child.defer_pagination:
-                # deferred pagination (query/query.go:3004-3011): first keep
-                # only cascade-surviving children, THEN sort+paginate.
-                surviving = c_payload.select(F.col("_pid").alias(DST)).distinct()
-                c_edges = c_edges.join(surviving, DST, "left_semi")
-                c_edges = self._sort_paginate(child.block, c_edges, root=False)
-            joined = c_edges.join(c_payload, c_edges[DST] == c_payload["_pid"], "inner")
-            child_name = child.block.alias if child.block.alias != child.block.attr else (
-                ("~" if child.block.reverse else "") + child.block.attr
-            )
-            n = used_names.get(child_name, 0)
-            used_names[child_name] = n + 1
-            if n:
-                # repeated child name: rendered under a marker field and
-                # merged into one array at JSON encode time
-                # (outputnode.go appends same-name children to one list)
-                child_name = f"{child_name}#dgdup{n}"
-            payload_col = F.col("_payload")
+            inrow = self._inrow_attrs(child)
+            cpay = self._encode(child, frozenset(a.out_name for a, _ in inrow))
+            key = self._child_key(cb, used_names)
+            fields.append(key)
+            per_src: dict = {}
+            for r in _by_rank(child.rows):
+                if r[DST] in cpay:
+                    per_src.setdefault(r[SRC], []).append(r)
             cnt_uid = next(
-                (a for a in child.block.children
+                (a for a in cb.children
                  if isinstance(a, Attr) and a.is_count and a.name == "uid"),
                 None,
             )
-            if cnt_uid is not None:
-                # count(uid) inside a child block: emitted as an extra
-                # `{count: n}` element of the child array (query/
-                # outputnode.go attachFacets count child). Ride the count
-                # on every element via a window; _clean() strips the
-                # sentinels and appends the count element.
-                cw = F.count("*").over(Window.partitionBy(F.col(SRC)))
-                joined = joined.withColumn("__cnt__", cw)
-                payload_col = payload_col.withField(
-                    "__cnt__", F.col("__cnt__").cast("long")
-                ).withField("__cntkey__", F.lit(cnt_uid.alias or "count"))
-            if child.block.normalize:
-                # child-level @normalize: each child node flattens to its
-                # aliased leaf paths at JSON encode time (_clean splices
-                # the expansion into the surrounding array;
-                # query/outputnode.go:921 normalize)
-                payload_col = payload_col.withField(
-                    "__norm__",
-                    F.lit(",".join(sorted(_aliased_names(child.block)))),
-                )
-            spec = child.block.facets
-            if spec and "facets" in c_edges.columns:
-                # inject edge facets as `pred|facet` keys into each child
-                # node dict (query/outputnode.go facet sibling encoding);
-                # bare @facets injects the whole facet map, expanded to
-                # per-key siblings at JSON encode time
-                if spec.all:
-                    payload_col = payload_col.withField(
-                        f"`{child_name}|`", F.col(FACETS)
-                    )
-                for key, alias in (spec.keys or []):
-                    payload_col = payload_col.withField(
-                        f"`{chr(1) + alias if alias else f'{child_name}|{key}'}`",
-                        F.col(f"facets.{key}")
-                    )
-                for _var, key in (spec.vars or {}).items():
-                    # @facets(L as weight) both binds the var AND renders
-                    # the facet sibling (query/outputnode.go facet output
-                    # is independent of the var binding)
-                    if not any((a or f"{child_name}|{k}") == f"{child_name}|{key}"
-                               for k, a in (spec.keys or [])):
-                        payload_col = payload_col.withField(
-                            f"`{child_name}|{key}`", F.col(f"facets.{key}")
-                        )
-                for o in (spec.order or []):
-                    # @facets(orderasc: f) also RENDERS the ordering facet
-                    # as a `pred|f` sibling (query/query.go:1812
-                    # addFacetsToResult on sorted facets)
-                    if not any(k == o.key for k, _a in (spec.keys or [])) \
-                            and o.key not in (spec.vars or {}).values():
-                        payload_col = payload_col.withField(
-                            f"`{child_name}|{o.key}`", F.col(f"facets.{o.key}")
-                        )
-            for a, ecol in child_inrow:
-                # in-row scalar attrs read straight off the traversal join
-                payload_col = payload_col.withField(a.out_name, F.col(ecol))
-            pmeta = self.g.schema.get(child.block.attr) if self.g.schema.has(child.block.attr) else None
+            norm = ",".join(sorted(_aliased_names(cb))) if cb.normalize else None
+            pmeta = self.g.schema.get(cb.attr) if self.g.schema.has(cb.attr) else None
             single = (pmeta is not None and pmeta.is_uid and not pmeta.list
-                      and not child.block.reverse
+                      and not cb.reverse
                       # a normalized child always renders as a list of
                       # flattened rows, even for non-list uid preds
-                      and not child.block.normalize)
-            child_arr = F.transform(F.col("_sorted"), lambda x: x["_p"])
-            if single:
-                # non-list uid predicate renders as an object, not a
-                # one-element array (query/outputnode.go list=false)
-                child_arr = child_arr[0]
-            arr = (
-                joined.select(F.col(SRC), F.struct(F.col(RANK).alias("_r"), payload_col.alias("_p")).alias("_rp"))
-                .groupBy(SRC)
-                # array_sort with a comparator on _r only: the payload may
-                # contain MAP fields (name@* language maps), which are not
-                # orderable — sort_array on the whole struct would fail
-                .agg(F.array_sort(
-                    F.collect_list("_rp"),
-                    lambda a, b: F.when(a["_r"] < b["_r"], -1)
-                                  .when(a["_r"] > b["_r"], 1).otherwise(0),
-                ).alias("_sorted"))
-                .select(
-                    F.col(SRC).alias(SUBJECT),
-                    child_arr.alias(child_name),
-                )
-            )
-            df = df.join(arr, SUBJECT, "left")
-            struct_fields.append(_qc(child_name))
-            if casc is not None and (not casc or child.block.attr in casc or child.block.alias in casc):
-                if single:
-                    cascade_checks.append(_qc(child_name).isNotNull())
-                else:
-                    cascade_checks.append(F.size(F.coalesce(_qc(child_name), F.array())) > 0)
+                      and not cb.normalize)
+            for src, crows in per_src.items():
+                if src not in vals:
+                    continue
+                if child.defer_pagination:
+                    # deferred pagination (query/query.go:3004-3011):
+                    # page the @cascade survivors
+                    crows = self._page_rows(cb, crows)
+                elems = [self._edge_payload(cb, key, r, cpay[r[DST]], inrow,
+                                            cnt_uid, len(crows), norm)
+                         for r in crows]
+                if elems:
+                    # a non-list uid predicate renders as an object, not
+                    # a one-element array (query/outputnode.go list=false)
+                    vals[src][key] = elems[0] if single else elems
+            if required(cb.attr, cb.alias):
+                checks.append(key)
 
-        if casc is not None:
-            for c in cascade_checks:
-                df = df.where(c)
+        return {u: {k: v.get(k) for k in fields} for u, v in vals.items()
+                if all(v.get(k) not in (None, []) for k in checks)}
 
-        if not struct_fields:
-            # nothing resolvable at this level (fields in-row from the
-            # parent, count(uid)-only, or unknown predicates): emit an
-            # empty node — _clean() drops it (query/outputnode.go: a node
-            # with no attrs is not emitted, never a bare uid)
-            struct_fields = [F.lit(None).cast("string").alias("_none")]
-        payload = df.select(
-            F.col(SUBJECT).alias("_pid"), F.struct(*struct_fields).alias("_payload")
-        )
-        return level.edges, payload
+    def _collect_attrs(self, level: Level, nodes: DataFrame,
+                       rels: list[tuple[DataFrame, list[str]]],
+                       vals: dict) -> None:
+        """Read every attribute relation of a level in ONE collect: the
+        relations, restricted to the level's nodes, are tagged and
+        unioned (missing columns null), and each row is scattered back
+        into ``vals[uid]`` under its relation's keys."""
+        if not rels or not vals:
+            return
+        union = None
+        uids = self._literal_uids(nodes, level)
+        for i, (rel, keys) in enumerate(rels):
+            rel = (rel.where(_isin(SUBJECT, uids)) if uids is not None
+                   else rel.join(nodes, SUBJECT, "left_semi"))
+            part = rel.select(F.col(SUBJECT), F.lit(i).alias("_ai"),
+                              *[_qc(k).alias(f"_c{i}_{j}") for j, k in enumerate(keys)])
+            union = part if union is None else union.unionByName(
+                part, allowMissingColumns=True)
+        with self._job_desc(level):
+            rows = union.collect()
+        for row in rows:
+            d = vals.get(row[SUBJECT])
+            if d is None:
+                continue
+            r = row.asDict(recursive=True)
+            i = r["_ai"]
+            for j, k in enumerate(rels[i][1]):
+                d[k] = r[f"_c{i}_{j}"]
+
+    @staticmethod
+    def _child_key(cb: Block, used_names: dict) -> str:
+        """A child block's output key; a repeated name renders under a
+        marker field merged into one array by _clean (outputnode.go
+        appends same-name children to one list)."""
+        name = cb.alias if cb.alias != cb.attr else (
+            ("~" if cb.reverse else "") + cb.attr)
+        n = used_names.get(name, 0)
+        used_names[name] = n + 1
+        return name if n == 0 else f"{name}#dgdup{n}"
+
+    def _edge_payload(self, cb: Block, key: str, row: dict, node: dict,
+                      inrow: list, cnt_uid, n: int, norm: str | None) -> dict:
+        """One child array element: the child node's payload plus what
+        rides on the edge that reached it."""
+        el = dict(node)
+        if cnt_uid is not None:
+            # count(uid) inside a child block: an extra `{count: n}`
+            # element of the child array (query/outputnode.go); _clean()
+            # strips the sentinels and appends the count element
+            el["__cnt__"] = n
+            el["__cntkey__"] = cnt_uid.alias or "count"
+        if norm is not None:
+            # child-level @normalize: each child node flattens to its
+            # aliased leaf paths at encode time (_clean splices the
+            # expansion into the surrounding array;
+            # query/outputnode.go:921 normalize)
+            el["__norm__"] = norm
+        spec = cb.facets
+        if spec and FACETS in row:
+            # edge facets as `pred|facet` keys of the child node
+            # (query/outputnode.go facet sibling encoding); bare @facets
+            # injects the whole facet map, expanded to per-key siblings
+            # by _clean
+            fac = row[FACETS] or {}
+            if spec.all:
+                el[f"{key}|"] = row[FACETS]
+            for k, alias in (spec.keys or []):
+                el[chr(1) + alias if alias else f"{key}|{k}"] = fac.get(k)
+            for _var, k in (spec.vars or {}).items():
+                # @facets(L as weight) both binds the var AND renders the
+                # facet sibling
+                if not any((a or f"{key}|{kk}") == f"{key}|{k}"
+                           for kk, a in (spec.keys or [])):
+                    el[f"{key}|{k}"] = fac.get(k)
+            for o in (spec.order or []):
+                # @facets(orderasc: f) also RENDERS the ordering facet
+                # (query/query.go:1812 addFacetsToResult on sorted facets)
+                if not any(kk == o.key for kk, _a in (spec.keys or [])) \
+                        and o.key not in (spec.vars or {}).values():
+                    el[f"{key}|{o.key}"] = fac.get(o.key)
+        for a, ecol in inrow:
+            # in-row scalar attrs read straight off the traversal edge
+            el[a.out_name] = row.get(ecol)
+        return el
 
     def _attr_output(self, attr: Attr, nodes: DataFrame, level: Level):
         """-> (DataFrame(subject, out_col), out_col name, multivalued?)"""
@@ -2870,7 +3018,7 @@ class Executor:
         if attr.name == "uid" and not attr.is_count:
             out = attr.alias or "uid"
             return (
-                nodes.select(SUBJECT, F.lower(F.format_string("0x%x", F.col(SUBJECT))).alias(out)),
+                nodes.select(SUBJECT, _uid_hex_col(F.col(SUBJECT)).alias(out)),
                 out,
                 False,
             )
@@ -2911,7 +3059,7 @@ class Executor:
                 # (nodes with no other data drop; query1_test
                 # TestCountEmptyData3 expects [])
                 return None, "", False
-            return self._count_per_parent(attr, nodes, out), out, False
+            return self._count_per_parent(attr, nodes, out, level), out, False
         if attr.name in _AGG_ATTRS and attr.val_var:
             # level aggregation: aggregate descendant-defined var per this
             # node; multi-level definitions propagate by summing along the
@@ -3021,7 +3169,7 @@ class Executor:
                     F.when(F.col("lang").isNull(), F.col("facets")),
                     ignorenulls=True).alias(f"{base_out}|"))
             vdf = (
-                nodes.join(sdf, SUBJECT, "inner")
+                self._restrict(nodes, sdf, level)
                 .groupBy(SUBJECT)
                 .agg(*aggs)
             )
@@ -3087,13 +3235,13 @@ class Executor:
                         F.transform(sorted_f, lambda m: m[fkey]).alias(
                             chr(1) + falias if falias else f"{out}|{fkey}"))
             vdf = (
-                nodes.join(sdf, SUBJECT, "inner")
+                self._restrict(nodes, sdf, level)
                 .withColumn("_pk", key(F.col(VALUE).cast("string")))
                 .groupBy(SUBJECT)
                 .agg(*agg)
             )
             return vdf, out, True
-        vdf = nodes.join(sdf, SUBJECT, "inner").select(
+        vdf = self._restrict(nodes, sdf, level).select(
             SUBJECT, F.col(VALUE).alias(out), *facet_sel)
         return vdf, out, False
 
@@ -3102,7 +3250,10 @@ class Executor:
         """Distinct node set of a level. Root frontiers are unique by
         construction (root functions dedup; fused scans have one row per
         node) — skip the distinct shuffle there; likewise for levels
-        whose DSTs are provably unique (Level.dst_unique, round 11)."""
+        whose DSTs are provably unique (Level.dst_unique, round 11). A
+        collected level's small uid set is its literal relation."""
+        if level.nodes is not None:
+            return level.nodes
         if SRC not in level.edges.columns:
             return level.edges.select(F.col(DST).alias(SUBJECT))
         sel = level.edges.select(F.col(DST).alias(SUBJECT))
@@ -3247,7 +3398,7 @@ class Executor:
         (query/groupby.go:385 groupLess); uid keys render as 0x-hex."""
         fields = []
         for out, is_uid in gmeta:
-            c = F.lower(F.format_string("0x%x", F.col(out))) if is_uid else F.col(out)
+            c = _uid_hex_col(F.col(out)) if is_uid else F.col(out)
             fields.append(c.alias(out))
         fields += [F.col(a) for a in acols]
         sort_st = F.struct(
@@ -3290,10 +3441,8 @@ class Executor:
                 (a.alias for a in block.children if isinstance(a, Attr) and a.is_count),
                 None,
             )
-            return (
-                level.edges.select(DST).distinct()
-                .agg(F.count("*").alias(alias or "count"))
-            )
+            # root frontiers are unique by construction (see _nodes)
+            return self._nodes(level).agg(F.count("*").alias(alias or "count"))
         skip: set[str] = set()
         if level.fused is not None:
             # single-scan root: frontier + same-home attr columns come out
@@ -3673,6 +3822,18 @@ def _find_root_flag(b: Block, flag: str) -> bool:
     return bool(getattr(b, flag, False))
 
 
+def _isin(col: str, values: list[int]) -> Column:
+    """`col IN (values)`, parsed by Spark in one call: Column.isin makes
+    a py4j round trip per literal (0.5 s of driver time at 1000 uids)."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(str, values))})")
+
+
+def _by_rank(rows: list[dict]) -> list[dict]:
+    return sorted(rows, key=lambda r: r[RANK])
+
+
 def _row_to_dict(row) -> dict:
     d = row.asDict(recursive=True) if hasattr(row, "asDict") else row
     return _clean(d)
@@ -3825,8 +3986,9 @@ def _clean(v):
         for k, x in v.items():
             if x is None:
                 continue
-            if k in ("__cnt__", "__cntkey__"):
-                # count(uid) sentinels are consumed at the list level
+            if k in ("__cnt__", "__cntkey__", "__norm__"):
+                # count(uid)/@normalize sentinels are consumed at the list
+                # level
                 continue
             if k.endswith("|"):
                 # @facets (all keys): expand the facet map into
@@ -3896,7 +4058,9 @@ def _clean(v):
                 if x["__cnt__"] is not None:
                     cnt = int(x["__cnt__"])
                     cnt_key = x.get("__cntkey__") or "count"
-            norm = x.pop("__norm__", None) if isinstance(x, dict) else None
+            # read, not popped: one child payload dict is shared by
+            # every parent edge that reaches the node
+            norm = x.get("__norm__") if isinstance(x, dict) else None
             cx = _clean(x)
             if cx is None or cx == {}:
                 continue

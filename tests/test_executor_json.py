@@ -1,7 +1,11 @@
 """Golden-ish JSON shape tests for the executor (model:
 query/query0_test.go JSONEq assertions, on the TPC-H graph fixture)."""
 
+import duckdb
+import pytest
+
 from dgraph_spark.sources.tpch_graph import uid_of
+from tests.conftest import SF_SMALL
 
 
 def test_nested_traversal(executor):
@@ -165,6 +169,24 @@ def test_pagination_negative_first(executor):
     names = [n["r_name"] for n in r_all["q"]]
     last2 = [n["r_name"] for n in r_last["q"]]
     assert last2 == names[-2:]
+
+
+@pytest.mark.parametrize("func, filt, where", [
+    ("type(Customer)", "", "true"),
+    ('eq(c_mktsegment, "BUILDING")', "", "c_mktsegment = 'BUILDING'"),
+    ("type(Customer)", "@filter(gt(c_acctbal, 1000.0))", "c_acctbal > 1000.0"),
+])
+def test_ordered_unpaginated_root_keeps_sort_order(executor, func, filt, where):
+    """A root whose node set is one wide-table scan, ordered but not
+    paged, must come back in sort order, not uid order."""
+    r = executor.execute(
+        f'{{ q(func: {func}, orderdesc: c_acctbal) {filt} {{ c_name c_acctbal }} }}')
+    got = [(n["c_name"], n["c_acctbal"]) for n in r["q"]]
+    want = duckdb.sql(
+        f"SELECT c_name, c_acctbal FROM '{SF_SMALL}/customer.parquet' "
+        f"WHERE {where} ORDER BY c_acctbal DESC").fetchall()
+    assert got == want
+    assert got != sorted(got)  # c_name follows uid order: the order differs
 
 
 def test_filter_or_not(executor):

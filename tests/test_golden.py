@@ -99,6 +99,43 @@ def test_golden_gate_cases(golden_ex):
     _run_gate(golden_ex, cases, gate)
 
 
+def test_golden_gate_cases_semijoin_frontier(golden_ex, monkeypatch):
+    """The same gate with every collected uid set above the literal
+    `IN` cap: each level reaches the next through the semi-join."""
+    from dgraph_spark.plans import executor
+
+    monkeypatch.setattr(executor, "LITERAL_FRONTIER_MAX", 0)
+    cases = {c["name"]: c for c in _load("cases.json")}
+    _run_gate(golden_ex, cases, _load("gate_cases.json"))
+
+
+# Spark jobs of one point read with a paged child, run level at a time:
+# the root scan, its attribute read, the child edge scan plus its
+# per-parent window (two jobs under AQE), the child attribute read.
+POINT_READ_JOBS = 5
+
+
+def test_point_read_job_bound(golden_ex, spark):
+    """Jobs counted by job group; each carries its level's description
+    and the caller's own description survives the call."""
+    sc = spark.sparkContext
+    q = "{ q(func: uid(0x1)) { name friend (first: 1, orderdesc: age) { name } } }"
+    ex = golden_ex()
+    ex.execute(q)  # first run: plan-cache and JIT warm-up
+    sc.setJobGroup("golden-point-read", "point read")
+    try:
+        got = ex.execute(q)
+        assert sc.getLocalProperty("spark.job.description") == "point read"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("golden-point-read"))
+    assert got == {"q": [{"name": "Michonne", "friend": [{"name": "Andrea"}]}]}
+    assert len(jobs) <= POINT_READ_JOBS, len(jobs)
+    store = sc._jsc.sc().statusStore()
+    assert {store.job(j).description().get() for j in jobs} == {"q L0", "q L1"}
+
+
 def test_golden_facets_cases(golden_facets_ex):
     """The reference's whole facets suite (query_facets_test.go), live."""
     cases = {c["name"]: c for c in _load("cases_facets.json")}

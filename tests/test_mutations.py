@@ -480,3 +480,34 @@ def test_iri_predicate_with_lang_tag(spark):
     q = parse_dql('{ q(func: has(name)) { <name>@en } }')
     attrs = q.blocks[0].children
     assert any(a.name == "name" and a.langs == ["en"] for a in attrs)
+
+
+def test_mutation_rejects_unparsable_line(spark):
+    """Two quads on one line are not one N-Quad: the mutation raises,
+    naming the line, instead of writing nothing."""
+    import pytest
+
+    from dgraph_spark.mutations import mutate
+
+    g = _graph(spark, '<0x1> <name> "Alice" .')
+    line = '_:a <p1> "x" . _:a <p2> "y" .'
+    with pytest.raises(ValueError, match="p1"):
+        mutate(g, "{ set { " + line + " } }")
+    with pytest.raises(ValueError, match="nope"):
+        mutate(g, "{ delete { <0x1> <name> nope . } }")
+    # the same quads one per line (comments allowed) both land
+    g2 = mutate(g, '{ set {\n# two new predicates\n_:a <p1> "x" .\n_:a <p2> "y" .\n} }')
+    assert g2.pred("p1").count() == 1 and g2.pred("p2").count() == 1
+
+
+def test_write_leaves_parent_schema_unchanged(spark):
+    """Graph versions are immutable, schema included: a write that adds
+    uid predicate `e` registers it on the new version only."""
+    from dgraph_spark.mutations import mutate
+
+    g = _graph(spark, '<0x1> <name> "Alice" .')
+    before = dict(g.schema.predicates)
+    g2 = mutate(g, '{ set {\n<0x1> <e> <0x2> .\n<0x1> <age> "3"^^<int> .\n} }')
+    assert g2.schema.has("e") and g2.schema.get("e").is_uid
+    assert not g.schema.has("e")
+    assert g.schema.predicates == before

@@ -124,14 +124,6 @@ class Graph:
             .distinct()
         )
 
-    def all_uids(self) -> DataFrame:
-        """Union of all subjects — dgraph's `has(_predicate_)` universe."""
-        dfs = [df.select(SUBJECT) for df in self.preds.values()]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out.distinct()
-
     # ------------------------------------------------------------- mutation-ish
     def with_pred(self, name: str, df: DataFrame, meta: Predicate | None = None) -> "Graph":
         """A new version with ``name`` replaced. It shares this version's
@@ -231,12 +223,12 @@ class SmallLoopConf:
     same SparkSession also see the reduced partitions / disabled AQE.
     They stay correct, just potentially narrower than tuned; a
     multi-tenant deployment should give each query thread its own
-    `spark.newSession()` (per-session SQLConf) or set
-    DGSPARK_LOOP_CONF=off. Concurrent LOOPS on one session are safe:
-    the regime is refcounted process-wide, so the original conf is
-    saved exactly once and restored only when the LAST loop leaves —
-    two interleaved per-instance save/restores would otherwise capture
-    the reduced conf as "original" and leave the session quartered.
+    `spark.newSession()` (per-session SQLConf). Concurrent LOOPS on one
+    session are safe: the regime is refcounted process-wide, so the
+    original conf is saved exactly once and restored only when the LAST
+    loop leaves — two interleaved per-instance save/restores would
+    otherwise capture the reduced conf as "original" and leave the
+    session quartered.
     One consequence of refcounting: while ANY loop is still small, a
     sibling loop whose frontier outgrew the cap keeps planning under
     the reduced conf (correct, but without AQE skew handling) — the
@@ -257,8 +249,7 @@ class SmallLoopConf:
         return id(self.spark)
 
     def enter(self):
-        import os
-        if self.active or os.environ.get("DGSPARK_LOOP_CONF") == "off":
+        if self.active:
             return
         with SmallLoopConf._LOCK:
             st = SmallLoopConf._STATE.get(self._key())
@@ -298,5 +289,3 @@ class SmallLoopConf:
             self.enter()
         else:
             self.exit()
-
-_POSTING_KEY_UDFS: dict = {}

@@ -195,9 +195,10 @@ def drop_attr(graph: Graph, pred: str) -> Graph:
     schema.predicates.pop(pred, None)
     for t, ps in schema.types.items():
         schema.types[t] = [p for p in ps if p != pred]
-    return Graph(spark=graph.spark, preds=preds, schema=schema,
-                 wide=graph.wide, pred_home=graph.pred_home,
-                 edge_homes=graph.edge_homes)
+    # a wide-table predicate also leaves the routing: attribute reads,
+    # in-row columns and fused filters all find it through home_of
+    pred_home = {k: v for k, v in graph.pred_home.items() if k != pred}
+    return _dc.replace(graph, preds=preds, schema=schema, pred_home=pred_home)
 
 
 def drop_type(graph: Graph, type_name: str) -> Graph:
@@ -209,9 +210,7 @@ def drop_type(graph: Graph, type_name: str) -> Graph:
             "dropped")
     schema = _copy.deepcopy(graph.schema)
     schema.types.pop(type_name, None)
-    return Graph(spark=graph.spark, preds=dict(graph.preds), schema=schema,
-                 wide=graph.wide, pred_home=graph.pred_home,
-                 edge_homes=graph.edge_homes)
+    return _dc.replace(graph, preds=dict(graph.preds), schema=schema)
 
 
 def drop_data(graph: Graph) -> Graph:
@@ -220,13 +219,11 @@ def drop_data(graph: Graph) -> Graph:
     column set (lang/facets included) so @lang / @facets queries on the
     emptied graph still analyze — they just return no rows."""
     preds = {name: df.limit(0) for name, df in graph.preds.items()}
-    # wide tables hold real rows: empty them too (schema kept), and keep
-    # the pred_home/edge_homes routing consistent with the emptied wides.
+    # wide tables hold real rows: empty them too (schema kept); the
+    # layout hints stay consistent with the emptied wides.
     wide = {name: df.limit(0) for name, df in graph.wide.items()}
-    return Graph(spark=graph.spark, preds=preds,
-                 schema=_copy.deepcopy(graph.schema),
-                 wide=wide, pred_home=graph.pred_home,
-                 edge_homes=graph.edge_homes)
+    return _dc.replace(graph, preds=preds, schema=_copy.deepcopy(graph.schema),
+                       wide=wide)
 
 
 def drop_all(graph: Graph) -> Graph:

@@ -13,16 +13,19 @@ Mirrors the reference's execution lifecycle (SURVEY.md §3.1) Spark-first:
   - @cascade defers pagination until after pruning
     (query/query.go:3004-3011).
 
-Two result modes:
-  - execute()      -> dgraph-shaped nested dict (golden-testable). A block
-    runs one level at a time, like query/query.go ProcessGraph: each
-    level's edge rows are collected once, and its uid set feeds the
-    next level's scans — as a literal `subject IN (...)` filter while it
-    has at most LITERAL_FRONTIER_MAX uids, through a semi-join against
-    the level's relation above that. The JSON is then encoded on the
-    driver from those per-level rows (query/outputnode.go ToJson).
+Result modes:
+  - execute() and execute_rdf() share one level encoder. A block runs
+    one level at a time, like query/query.go ProcessGraph: each level's
+    edge rows are collected once, and its uid set feeds the next level's
+    scans — as a literal `subject IN (...)` filter while it has at most
+    LITERAL_FRONTIER_MAX uids, through a semi-join against the level's
+    relation above that. _encode then reads each level's attribute
+    values in one collect and keeps them on the level; execute() builds
+    dgraph-shaped nested dicts from them (query/outputnode.go ToJson),
+    execute_rdf() writes N-Quads from the same values and edge rows
+    (query/outputrdf.go ToRDF).
   - execute_flat() -> flat DataFrame per block (oracle/hash-checkable):
-    lineage joins, one Spark plan per block.
+    the lazy plan, lineage joins, one Spark plan per block.
 """
 
 from __future__ import annotations
@@ -183,6 +186,11 @@ class Level:
     # (attr, row key) of attrs a fused root collected with its rows
     row_attrs: list = field(default_factory=list)
     depth: int = 0
+    # set by _encode: uid -> raw attribute values (bigfloats as their
+    # lexical text) of every node that survives @cascade, and id(attr) ->
+    # the key each attr's values sit under — what execute_rdf() writes
+    values: dict | None = None
+    attr_keys: dict = field(default_factory=dict)
 
 
 class Executor:
@@ -364,22 +372,27 @@ class Executor:
     def execute_rdf(self, query: str | ParsedQuery, vars: dict | None = None) -> str:
         """Query results as N-Quads (query/outputrdf.go ToRDF).
 
-        DFS over the executed levels, attribute-major in query order;
-        subjects ascend in SrcUID order, uid-pred triples follow the
-        (sorted/paginated) posting order; values render with valToBytes
-        quoting (ints/floats quoted, bools bare, strings JSON-escaped,
-        datetimes RFC3339). Unsupported directives raise the reference's
-        exact error strings (outputrdf.go validateSubGraphForRDF)."""
+        Each rendered block runs level at a time and is encoded exactly as
+        in execute(); the N-Quads are then written on the driver from the
+        encoded levels (_rdf_level). Var and shortest-path blocks run for
+        their variables and write nothing, as in execute(). Values render
+        with valToBytes quoting (_rdf_object). Unsupported directives raise
+        the reference's exact error strings (outputrdf.go
+        validateSubGraphForRDF)."""
         lines: list[str] = []
         for block in self._scheduled(query, vars, rdf=True):
             if block.is_schema:
                 continue
-            if block.shortest is not None:
-                self._run_shortest(block)  # binds path vars; no RDF body
+            if block.is_var_block or block.shortest is not None:
+                self._tracked(self._run_block, block)
                 continue
-            level = self._tracked(self._run_block, block)
+            self._block_alias = block.alias
+            level = self._tracked(
+                lambda b: self._run_block(b, collect=True), block)
             if level is not None:
-                self._rdf_emit(level, lines)
+                self._encode(level)
+                roots = self._reached(level, None).get(None, [])
+                self._rdf_level(level, sorted({r[DST] for r in roots}), lines)
         return "".join(lines)
 
     def _rdf_validate(self, block: Block) -> None:
@@ -414,89 +427,36 @@ class Executor:
             else:
                 self._rdf_validate(c)
 
-    def _rdf_emit(self, level: Level, lines: list[str]) -> None:
-        """Emit one level's children (attribute-major, query order), then
-        descend — castToRDF's traversal shape."""
-        block = level.block
-        nodes = self._nodes(level)
-        child_levels = list(level.children)
-
-        def take_level(b) -> "Level | None":
-            for i, cl in enumerate(child_levels):
-                if cl.block is b:
-                    return child_levels.pop(i)
-            return None
-
-        for c in block.children:
-            if isinstance(c, Attr):
-                self._rdf_attr(c, nodes, level, lines)
+    def _rdf_level(self, level: Level, subjects: list[int],
+                   lines: list[str]) -> None:
+        """castToRDF over one encoded level: its attrs and uid children in
+        query order, then the child levels expand() or @recurse
+        synthesized. An attr's values go by ascending subject, a list
+        value in posting order; a uid child's edges go by subject, then
+        posting (sorted/paginated) order, followed by the child's own
+        level."""
+        levels = {id(cl.block): cl for cl in level.children}
+        queried = {id(c) for c in level.block.children}
+        for c in level.block.children + [cl.block for cl in level.children
+                                         if id(cl.block) not in queried]:
+            child = levels.get(id(c))
+            if child is not None:
+                groups = self._reached(child, set(subjects))
+                for src in sorted(groups):
+                    lines.extend(
+                        f"<{_uid_hex(src)}> <{c.alias}> <{_uid_hex(r[DST])}> .\n"
+                        for r in groups[src])
+                self._rdf_level(child, sorted({r[DST] for rs in groups.values() for r in rs}),
+                                lines)
                 continue
-            cl = take_level(c)
-            if cl is None:
-                continue
-            self._rdf_edges(cl, lines)
-            self._rdf_emit(cl, lines)
-        # levels not matched by identity (recurse-synthesized blocks)
-        for cl in child_levels:
-            self._rdf_edges(cl, lines)
-            self._rdf_emit(cl, lines)
-
-    def _rdf_edges(self, child: Level, lines: list[str]) -> None:
-        """Uid-pred relation triples: src-major ascending, posting
-        (rank when ordered, else uid) order within a source. The line
-        TEXT is built as a column expression — the driver receives
-        finished strings, not rows to format (a has(pred)-sized dump
-        stays JVM-side except the final concat)."""
-        b = child.block
-        name = b.alias or (("~" if b.reverse else "") + (b.attr or ""))
-        e = child.edges
-        if SRC not in e.columns or DST not in e.columns:
-            return
-        keys = [SRC, RANK] if RANK in e.columns else [SRC, DST]
-        formatted = e.orderBy(*keys).select(
-            F.format_string("<%#x> <%s> <%#x> .\n", F.col(SRC), F.lit(name),
-                            F.col(DST)).alias("_l"))
-        lines.extend(r["_l"] for r in formatted.collect())
-
-    def _rdf_attr(self, attr: Attr, nodes: DataFrame, level: Level,
-                  lines: list[str]) -> None:
-        if attr.expand is not None:
-            return
-        if attr.name == "uid" and not attr.is_count:
-            return  # outputrdf.go: RDF for the `uid` attribute is ignored
-        out = self._attr_output(attr, nodes, level)
-        col_df, out_col, _multi = out if out is not None else (None, "", False)
-        if col_df is None:
-            return
-        dtype = dict(col_df.dtypes).get(out_col, "string")
-        is_array = dtype.startswith("array<")
-        elem = dtype[6:-1] if is_array else dtype
-        if elem.startswith("struct") or elem.startswith("map"):
-            # outputrdf.go:189 — geo values cannot be rendered as N-Quads
-            raise ValueError("Geo id is not supported in rdf output")
-        # distributed formatter: line text is built executor-side — a
-        # column expression for the high-volume types (byte-identical to
-        # _rdf_object), an Arrow-batched pandas UDF running _rdf_object
-        # itself for the rest (floats' Go %g, datetime offset rules,
-        # decimals). Arrays posexplode first (element order preserved);
-        # the driver only receives finished line strings.
-        base = col_df.where(_qc(out_col).isNotNull())
-        if is_array:
-            vals = base.select(
-                F.col(SUBJECT), F.posexplode(_qc(out_col)).alias("_p", "_v")
-            ).where(F.col("_v").isNotNull())
-            keys = [SUBJECT, "_p"]
-        else:
-            vals = base.select(F.col(SUBJECT), _qc(out_col).alias("_v"))
-            keys = [SUBJECT]
-        obj_expr = _rdf_object_expr(F.col("_v"), elem)
-        if obj_expr is None:
-            obj_expr = _rdf_object_udf(elem)(F.col("_v"))
-        formatted = vals.orderBy(*keys).select(
-            F.concat(
-                F.format_string("<%#x> <%s> ", F.col(SUBJECT), F.lit(out_col)),
-                obj_expr, F.lit(" .\n")).alias("_l"))
-        lines.extend(r["_l"] for r in formatted.collect())
+            key = level.attr_keys.get(id(c))
+            if key is None or (c.name == "uid" and not c.is_count):
+                continue  # outputrdf.go: RDF for the `uid` attribute is ignored
+            for u in subjects:
+                v = level.values[u].get(key)
+                lines.extend(f"<{_uid_hex(u)}> <{key}> {_rdf_object(x)} .\n"
+                             for x in (v if isinstance(v, list) else [v])
+                             if x is not None)
 
     # ============================================================ scheduling
     def _schedule(self, blocks: list[Block]) -> list[Block]:
@@ -2438,11 +2398,7 @@ class Executor:
             )
             return [{alias or "count": n}]
         payload = self._encode(level)
-        rows = [r for r in _by_rank(level.rows) if r[DST] in payload]
-        if level.defer_pagination:
-            # deferred pagination (query/query.go:3004-3011): page the
-            # @cascade survivors
-            rows = self._page_rows(block, rows)
+        rows = self._reached(level, None).get(None, [])
         # nodes with no requested data are omitted (dgraph JSON behavior)
         out = [d for d in (_clean(payload[r[DST]]) for r in rows) if d]
         if block.normalize:
@@ -2461,96 +2417,23 @@ class Executor:
             # count child leads the result list (query/outputnode.go)
             n = len({r[DST] for r in rows})
             out = [{a.alias or "count": n} for a in cnt_attrs] + out
-        bf_tree = self._bigfloat_key_tree(block)
-        if bf_tree:
-            # bigfloat output renders as the shortest decimal that
-            # round-trips the 200-bit value — a JSON NUMBER with full
-            # digits ("amount":10.0000000000000000000124,
-            # query4_test.go TestBigFloatTypeTokenizer), carried as
-            # decimal.Decimal in the result dicts. Keys are matched
-            # per LEVEL (a same-named string field at a different
-            # nesting depth is left alone); @normalize rewrites the key
-            # structure, so flattened blocks fall back to the flat key
-            # set — there a non-bigfloat string that fails to parse
-            # stays a string instead of becoming None.
-            from dgraph_spark.functions.bigfloat import render_py
-
-            def leaf(v):
-                if isinstance(v, str):
-                    r = render_py(v)
-                    return v if r is None else r
-                if isinstance(v, list):  # [bigfloat] list predicate
-                    return [leaf(x) for x in v]
-                return v
-
-            if _has_normalize(block):
-                flat = _flatten_bf_tree(bf_tree)
-
-                def conv(d):
-                    for k, v in d.items():
-                        if isinstance(v, list) and not (
-                                v and isinstance(v[0], dict)):
-                            if k in flat:
-                                d[k] = leaf(v)
-                        elif isinstance(v, list):
-                            for c in v:
-                                if isinstance(c, dict):
-                                    conv(c)
-                        elif k in flat:
-                            d[k] = leaf(v)
-                    return d
-            else:
-                def conv(d, tree=bf_tree):
-                    for k, v in d.items():
-                        sub = tree.get(k)
-                        if sub is True:
-                            d[k] = leaf(v)
-                        elif isinstance(sub, dict):
-                            if isinstance(v, list):
-                                for c in v:
-                                    if isinstance(c, dict):
-                                        conv(c, sub)
-                            elif isinstance(v, dict):
-                                conv(v, sub)
-                    return d
-
-            out = [conv(d) for d in out]
         return out
 
-    def _bigfloat_key_tree(self, block: Block) -> dict:
-        """Per-level map of output keys whose values are lexical 200-bit
-        bigfloats: ``key -> True`` for a bigfloat leaf at THIS level
-        (reads of bigfloat predicates, val()/aggregates of bigfloat
-        vars, math() over bigfloat vars), ``key -> subtree`` for a child
-        block containing bigfloat leaves deeper down. Same-named child
-        blocks (merged into one array by _clean) share one subtree."""
-        tree: dict = {}
-        for c in block.children:
-            if isinstance(c, Block):
-                sub = self._bigfloat_key_tree(c)
-                if sub:
-                    name = c.alias if c.alias != c.attr else (
-                        ("~" if c.reverse else "") + (c.attr or ""))
-                    prev = tree.get(name)
-                    tree[name] = {**prev, **sub} if isinstance(prev, dict) \
-                        else sub
-                continue
-            if not isinstance(c, Attr) or c.is_count:
-                continue
-            base = c.name.lstrip("~")
-            if (c.val_var is None and c.math is None
-                    and self.g.schema.has(base)
-                    and self.g.schema.get(base).typ == "bigfloat"):
-                tree[c.out_name] = True
-            elif c.val_var and c.val_var in self.var_bigfloat:
-                tree[c.out_name] = True
-            elif c.math is not None and c.var in self.var_bigfloat:
-                tree[c.out_name] = True
-            elif (c.math is not None and not c.var and any(
-                    v in self.var_bigfloat
-                    for v in math_vars(c.math))):
-                tree[c.out_name] = True
-        return tree
+    def _is_bigfloat(self, a: Attr) -> bool:
+        """Whether an attr's values are lexical 200-bit bigfloats: a read
+        of a bigfloat predicate, val() or an aggregate of a bigfloat var,
+        math() bound to or over bigfloat vars."""
+        if a.is_count:
+            return False
+        if a.val_var is None and a.math is None:
+            base = a.name.lstrip("~")
+            return self.g.schema.has(base) and self.g.schema.get(base).typ == "bigfloat"
+        if a.val_var is not None and a.val_var in self.var_bigfloat:
+            return True
+        if a.math is None:
+            return False
+        return (a.var in self.var_bigfloat if a.var
+                else bool(math_vars(a.math) & self.var_bigfloat))
 
     def _agg_only_json(self, block: Block) -> list:
         """Empty (no-func) block of aggregates + math, e.g.
@@ -2750,14 +2633,32 @@ class Executor:
             return rows[first:]
         return rows[offset:] if first is None else rows[offset:offset + first]
 
-    # ========================================================= JSON encoding
-    def _encode(self, level: Level, skip: frozenset = frozenset()) -> dict:
+    def _reached(self, level: Level, parents) -> dict:
+        """Parent uid -> the encoded level's rows from that parent to a
+        node that survives @cascade, in rank order; paged here when the
+        level's pagination waited for @cascade (query/query.go:3004-3011).
+        ``parents`` (uids) keeps only rows from those parents; None at the
+        root, whose rows form one group under None."""
+        groups: dict = {}
+        for r in _by_rank(level.rows):
+            src = None if parents is None else r[SRC]
+            if r[DST] in level.values and (parents is None or src in parents):
+                groups.setdefault(src, []).append(r)
+        if level.defer_pagination:
+            groups = {s: self._page_rows(level.block, rs) for s, rs in groups.items()}
+        return groups
+
+    # ========================================================= level encoding
+    def _encode(self, level: Level) -> dict:
         """uid -> raw payload dict for every node of a collected level that
-        survives @cascade: the attrs in query order, then one list (or
-        object) per child block — the dicts _clean()/_normalize() render
-        (query/outputnode.go ToJson). ``skip``: attrs the parent supplies
-        per edge from in-row columns. Attribute relations of a level are
-        read in ONE collect (a tagged union) through its node set."""
+        survives @cascade: the attrs, then one list (or object) per child
+        block — the dicts _clean()/_normalize() render (query/outputnode.go
+        ToJson). Attribute relations of a level are read in ONE collect (a
+        tagged union) through its node set; values already on the level's
+        rows (a fused root's columns, in-row columns of the edge that
+        reached the node) are taken from there. Those per-node values are
+        kept on the level (Level.values) for execute_rdf(); the payload
+        renders bigfloats as decimals."""
         if level.rows is None:
             self._collect_level(level, root=level.parent is None)  # @recurse rounds
         block = level.block
@@ -2768,20 +2669,29 @@ class Executor:
 
         nodes = self._nodes(level)
         vals: dict = {r[DST]: {} for r in level.rows}
-        fields: list[str] = []   # payload keys, in query order
+        fields: list[str] = []   # payload keys
         checks: list[str] = []   # keys @cascade requires non-empty
+        bigfloat: set[str] = set()  # keys holding lexical bigfloats
+        level.attr_keys = {}
         rels: list[tuple[DataFrame, list[str]]] = []
         local: dict[str, tuple] = {}  # var -> (relation thunk, column)
-        fused = {a.out_name: k for a, k in level.row_attrs}
-        batch, rest = self._split_batchable(
-            [a for a in level.attr_items if a.out_name not in skip])
+
+        def keep(attr: Attr, key: str) -> None:
+            level.attr_keys[id(attr)] = key
+            if self._is_bigfloat(attr):
+                bigfloat.add(key)
+
+        on_row = {a.out_name: k
+                  for a, k in level.row_attrs + self._inrow_attrs(level)}
+        batch, rest = self._split_batchable(level.attr_items)
         for home, items in batch.items():
             fetch = []
             for a, c in items:
                 fields.append(a.out_name)
-                if a.out_name in fused:
+                keep(a, a.out_name)
+                if a.out_name in on_row:
                     for r in level.rows:
-                        vals[r[DST]][a.out_name] = r[fused[a.out_name]]
+                        vals[r[DST]][a.out_name] = r[on_row[a.out_name]]
                 else:
                     fetch.append((c, a.out_name))
                 if a.var:
@@ -2814,6 +2724,7 @@ class Executor:
                 for u in vals:
                     vals[u][out] = _uid_hex(u)
                 fields.append(out)
+                keep(attr, out)
                 if attr.var:
                     col_df = self._attr_output(attr, nodes, level)[0]
                     local[attr.var] = (lambda d=col_df: d, out)
@@ -2824,6 +2735,7 @@ class Executor:
             # facet sibling columns (`pred|key` / `pred|` map) ride along
             keys = [out] + [c for c in col_df.columns if c not in (SUBJECT, out)]
             fields.extend(keys)
+            keep(attr, out)
             rels.append((col_df, keys))
             if attr.var:
                 local[attr.var] = (lambda d=col_df: d, out)
@@ -2863,6 +2775,7 @@ class Executor:
                 if col_df is None:
                     continue
             fields.append(out)
+            keep(attr, out)
             rels.append((col_df, [out]))
             if required(attr.name, attr.out_name):
                 checks.append(out)
@@ -2887,14 +2800,9 @@ class Executor:
                             vals[r["_gsrc"]][key] = [
                                 {"@groupby": r.asDict(recursive=True)["_g"]}]
                 continue
-            inrow = self._inrow_attrs(child)
-            cpay = self._encode(child, frozenset(a.out_name for a, _ in inrow))
+            cpay = self._encode(child)
             key = self._child_key(cb, used_names)
             fields.append(key)
-            per_src: dict = {}
-            for r in _by_rank(child.rows):
-                if r[DST] in cpay:
-                    per_src.setdefault(r[SRC], []).append(r)
             cnt_uid = next(
                 (a for a in cb.children
                  if isinstance(a, Attr) and a.is_count and a.name == "uid"),
@@ -2907,14 +2815,8 @@ class Executor:
                       # a normalized child always renders as a list of
                       # flattened rows, even for non-list uid preds
                       and not cb.normalize)
-            for src, crows in per_src.items():
-                if src not in vals:
-                    continue
-                if child.defer_pagination:
-                    # deferred pagination (query/query.go:3004-3011):
-                    # page the @cascade survivors
-                    crows = self._page_rows(cb, crows)
-                elems = [self._edge_payload(cb, key, r, cpay[r[DST]], inrow,
+            for src, crows in self._reached(child, vals).items():
+                elems = [self._edge_payload(cb, key, r, cpay[r[DST]],
                                             cnt_uid, len(crows), norm)
                          for r in crows]
                 if elems:
@@ -2924,8 +2826,11 @@ class Executor:
             if required(cb.attr, cb.alias):
                 checks.append(key)
 
-        return {u: {k: v.get(k) for k in fields} for u, v in vals.items()
-                if all(v.get(k) not in (None, []) for k in checks)}
+        level.values = {u: v for u, v in vals.items()
+                        if all(v.get(k) not in (None, []) for k in checks)}
+        return {u: {k: _render_bigfloat(v.get(k)) if k in bigfloat else v.get(k)
+                    for k in fields}
+                for u, v in level.values.items()}
 
     def _collect_attrs(self, level: Level, nodes: DataFrame,
                        rels: list[tuple[DataFrame, list[str]]],
@@ -2968,7 +2873,7 @@ class Executor:
         return name if n == 0 else f"{name}#dgdup{n}"
 
     def _edge_payload(self, cb: Block, key: str, row: dict, node: dict,
-                      inrow: list, cnt_uid, n: int, norm: str | None) -> dict:
+                      cnt_uid, n: int, norm: str | None) -> dict:
         """One child array element: the child node's payload plus what
         rides on the edge that reached it."""
         el = dict(node)
@@ -3007,9 +2912,6 @@ class Executor:
                 if not any(kk == o.key for kk, _a in (spec.keys or [])) \
                         and o.key not in (spec.vars or {}).values():
                     el[f"{key}|{o.key}"] = fac.get(o.key)
-        for a, ecol in inrow:
-            # in-row scalar attrs read straight off the traversal edge
-            el[a.out_name] = row.get(ecol)
         return el
 
     def _attr_output(self, attr: Attr, nodes: DataFrame, level: Level):
@@ -3818,10 +3720,6 @@ def _has_cascade(b: Block) -> bool:
     return any(isinstance(c, Block) and _has_cascade(c) for c in b.children)
 
 
-def _find_root_flag(b: Block, flag: str) -> bool:
-    return bool(getattr(b, flag, False))
-
-
 def _isin(col: str, values: list[int]) -> Column:
     """`col IN (values)`, parsed by Spark in one call: Column.isin makes
     a py4j round trip per literal (0.5 s of driver time at 1000 uids)."""
@@ -3888,45 +3786,17 @@ def _go_g(f: float) -> str:
     return s[:-2] if s.endswith(".0") else s
 
 
-def _rdf_object_expr(col, dtype: str):
-    """Column-expression twin of _rdf_object for the high-volume types
-    (string / integer / boolean); returns None when the type needs the
-    driver-side renderer (floats' Go %g, datetimes' offset rules, geo,
-    decimals — rare in bulk dumps, exactness over throughput there)."""
-    if dtype in ("int", "bigint", "smallint", "tinyint"):
-        return F.format_string('"%d"', col.cast("long"))
-    if dtype == "boolean":
-        return F.when(col, F.lit("true")).otherwise(F.lit("false"))
-    if dtype == "string":
-        # JSON-marshal exactly like json.dumps(ensure_ascii=False):
-        # to_json emits the same escape set (\" \\ \n \r \t \uXXXX for
-        # other control chars, non-ASCII passed through)
-        j = F.to_json(F.struct(col.alias("v")))
-        return F.substring(j, 6, F.length(j) - 6)
-    return None
-
-
-def _rdf_object_udf(elem: str):
-    """Arrow-batched formatter for the types without a pure column
-    expression — the same _rdf_object renderer, executed on the
-    executors instead of a driver row loop."""
-    import pandas as _pd
-
-    @F.pandas_udf("string")
-    def fmt(s: "_pd.Series") -> "_pd.Series":
-        return s.map(lambda v: None if v is None else _rdf_object(v, elem))
-
-    return fmt
-
-
-def _rdf_object(v, dtype: str) -> str:
+def _rdf_object(v) -> str:
     """One RDF object term (outputrdf.go getObjectVal + valToBytes):
-    ints/floats quoted numbers, bools bare, strings JSON-marshaled,
-    datetimes quoted RFC3339."""
+    ints/floats/decimals quoted numbers, bools bare, strings
+    JSON-marshaled, datetimes quoted RFC3339; a geo (map) value raises."""
     import datetime as _dt
 
     if isinstance(v, bool):
         return "true" if v else "false"
+    if isinstance(v, dict):
+        # outputrdf.go:189 — geo values cannot be rendered as N-Quads
+        raise ValueError("Geo id is not supported in rdf output")
     if isinstance(v, _dt.datetime):
         return f'"{_render_datetime(v)}"'
     if isinstance(v, _dt.date):
@@ -3935,9 +3805,23 @@ def _rdf_object(v, dtype: str) -> str:
         return f'"{v}"'
     if isinstance(v, float):
         return f'"{_go_g(v)}"'
-    if dtype.startswith("decimal"):
-        return f'"{v}"'
+    # strings, and decimals (whose text needs no escaping)
     return json.dumps(str(v), ensure_ascii=False)
+
+
+def _render_bigfloat(v):
+    """A lexical 200-bit bigfloat as the shortest decimal that round-trips
+    it — a JSON NUMBER with full digits ("amount":10.0000000000000000000124,
+    query4_test.go TestBigFloatTypeTokenizer), carried as decimal.Decimal;
+    a list renders element-wise, and a string that does not parse stays."""
+    from dgraph_spark.functions.bigfloat import render_py
+
+    if isinstance(v, list):  # [bigfloat] list predicate
+        return [_render_bigfloat(x) for x in v]
+    if isinstance(v, str):
+        r = render_py(v)
+        return v if r is None else r
+    return v
 
 
 def _render_datetime(v: "datetime.datetime") -> str:
@@ -4099,26 +3983,6 @@ def _aliased_names(b: Block) -> set[str]:
                 out.add(c.alias)
 
     walk(b)
-    return out
-
-
-def _has_normalize(block) -> bool:
-    """True when this block or any descendant block flattens with
-    @normalize (key structure rewritten — per-level key matching would
-    miss the spliced leaves)."""
-    if block.normalize:
-        return True
-    return any(_has_normalize(c) for c in block.children
-               if isinstance(c, Block))
-
-
-def _flatten_bf_tree(tree: dict) -> set[str]:
-    out: set[str] = set()
-    for k, v in tree.items():
-        if v is True:
-            out.add(k)
-        else:
-            out |= _flatten_bf_tree(v)
     return out
 
 

@@ -242,31 +242,47 @@ def test_recurse_edge_dedup_semantics(spark):
     assert "knows" not in a2     # a->b already taken -> recursion stops
 
 
-def test_rdf_object_expr_matches_driver_renderer(spark):
-    """The distributed RDF line formatter (_rdf_object_expr) is
-    byte-identical to the driver renderer (_rdf_object) for the types it
-    claims — strings with every escape class, integers, booleans."""
-    from pyspark.sql import functions as F
-
-    from dgraph_spark.plans.executor import _rdf_object, _rdf_object_expr
+def test_rdf_object_renders_terms():
+    """RDF object terms (outputrdf.go valToBytes): strings JSON-escaped
+    with every escape class, integers quoted, booleans bare."""
+    from dgraph_spark.plans.executor import _rdf_object
 
     vals = ["plain", 'quo"te', "back\\slash", "new\nline", "tab\there",
             "ünïcodé 你好", "ctrl\x01char", ""]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [r["o"] for r in df.select(
-        _rdf_object_expr(F.col("v"), "string").alias("o")).collect()]
-    assert got == [_rdf_object(v, "string") for v in vals]
+    assert [_rdf_object(v) for v in vals] == [
+        '"plain"', '"quo\\"te"', '"back\\\\slash"', '"new\\nline"',
+        '"tab\\there"', '"ünïcodé 你好"', '"ctrl\\u0001char"', '""']
+    assert [_rdf_object(v) for v in (0, 42, -7, 2 ** 62)] == \
+        ['"0"', '"42"', '"-7"', f'"{2 ** 62}"']
+    assert [_rdf_object(v) for v in (True, False)] == ["true", "false"]
 
-    di = spark.createDataFrame([(0,), (42,), (-7,), (2 ** 62,)], "v long")
-    gi = [r["o"] for r in di.select(
-        _rdf_object_expr(F.col("v"), "bigint").alias("o")).collect()]
-    assert gi == ['"0"', '"42"', '"-7"', f'"{2 ** 62}"']
 
-    db = spark.createDataFrame([(True,), (False,)], "v boolean")
-    gb = [r["o"] for r in db.select(
-        _rdf_object_expr(F.col("v"), "boolean").alias("o")).collect()]
-    assert gb == ["true", "false"]
+def test_rdf_string_escapes(spark):
+    """A string value that needs escapes, end to end through N-Quads."""
+    from dgraph_spark.plans import Executor
+    from dgraph_spark.schema import SchemaRegistry
+    from dgraph_spark.sources.rdf import graph_from_triples, parse_nquads
 
-    # types with driver-only rendering are declined, not mis-rendered
-    assert _rdf_object_expr(F.col("v"), "double") is None
-    assert _rdf_object_expr(F.col("v"), "timestamp") is None
+    line = ('<0x1> <s> "quo\\"te back\\\\slash new\\nline tab\\there '
+            '\\u00fcni \\u4f60" .')
+    df = spark.createDataFrame([(line,)], "value string")
+    g = graph_from_triples(spark, parse_nquads(df),
+                           SchemaRegistry.parse("s: string ."))
+    assert Executor(g).execute_rdf("{ q(func: uid(1)) { s } }") == (
+        '<0x1> <s> "quo\\"te back\\\\slash new\\nline tab\\there üni 你" .\n')
+
+
+def test_rdf_inrow_child_attr(executor):
+    """A child attr read in-row off the traversal edge (~in_nation is
+    derived from the customer table), ranked by an in-row order key."""
+    got = executor.execute_rdf(
+        '{ q(func: eq(n_name, "NATION_3")) { n_name '
+        '  ~in_nation (first: 3, orderdesc: c_acctbal) { c_name } } }')
+    assert got == (
+        '<0x20000000003> <n_name> "NATION_3" .\n'
+        '<0x20000000003> <in_nation> <0x30000000039> .\n'
+        '<0x20000000003> <in_nation> <0x30000000011> .\n'
+        '<0x20000000003> <in_nation> <0x30000000049> .\n'
+        '<0x30000000011> <c_name> "Customer#000000017" .\n'
+        '<0x30000000039> <c_name> "Customer#000000057" .\n'
+        '<0x30000000049> <c_name> "Customer#000000073" .\n')

@@ -164,6 +164,98 @@ def test_golden_rdf_cases(golden_ex):
     assert not failures, f"{len(failures)} rdf regressions: {failures}"
 
 
+# N-Quad text of shapes the reference RDF suite leaves out.
+RDF_PINS = {
+    # list values in posting order, not value order
+    "list_in_posting_order": (
+        "{ q(func: uid(20000, 20001, 1, 31)) { score graduation } }",
+        '<0x4e20> <score> "56" .\n<0x4e20> <score> "90" .\n'
+        '<0x4e21> <score> "85" .\n<0x4e21> <score> "68" .\n'
+        '<0x1> <graduation> "1932-01-01T00:00:00Z" .\n'
+        '<0x1f> <graduation> "1935-01-01T00:00:00Z" .\n'
+        '<0x1f> <graduation> "1933-01-01T00:00:00Z" .\n'),
+    # floats in Go %g form ("55.10" -> 55.1), a list of them too
+    "float_go_g": (
+        "{ q(func: uid(1, 23, 20000)) { survival_rate power average } }",
+        '<0x1> <survival_rate> "98.99" .\n<0x17> <survival_rate> "1.6" .\n'
+        '<0x1> <power> "13.25" .\n'
+        '<0x4e20> <average> "46.93" .\n<0x4e20> <average> "55.1" .\n'),
+    "datetime_bool_int": (
+        "{ q(func: uid(1, 23)) { dob alive age } }",
+        '<0x1> <dob> "1910-01-01T00:00:00Z" .\n'
+        '<0x17> <dob> "1910-01-02T00:00:00Z" .\n'
+        '<0x1> <alive> true .\n<0x17> <alive> true .\n'
+        '<0x1> <age> "38" .\n<0x17> <age> "15" .\n'),
+    "count_pred": (
+        "{ q(func: uid(1, 23, 25)) { name count(friend) } }",
+        '<0x1> <name> "Michonne" .\n<0x17> <name> "Rick Grimes" .\n'
+        '<0x19> <name> "Daryl Dixon" .\n<0x1> <count(friend)> "5" .\n'
+        '<0x17> <count(friend)> "1" .\n<0x19> <count(friend)> "0" .\n'),
+    "val_math_child": (
+        "{ q(func: uid(1)) { name friend { a as age  b: math(a + 1)  val(a) } } }",
+        '<0x1> <name> "Michonne" .\n'
+        + "".join(f"<0x1> <friend> <{u}> .\n"
+                  for u in ("0x17", "0x18", "0x19", "0x1f", "0x65"))
+        + '<0x17> <age> "15" .\n<0x18> <age> "15" .\n'
+        '<0x19> <age> "17" .\n<0x1f> <age> "19" .\n'
+        '<0x17> <b> "16" .\n<0x18> <b> "16" .\n'
+        '<0x19> <b> "18" .\n<0x1f> <b> "20" .\n'
+        '<0x17> <val(a)> "15" .\n<0x18> <val(a)> "15" .\n'
+        '<0x19> <val(a)> "17" .\n<0x1f> <val(a)> "19" .\n'),
+    "ordered_child": (
+        "{ q(func: uid(1)) { friend(orderdesc: age) { name age } } }",
+        "".join(f"<0x1> <friend> <{u}> .\n"
+                for u in ("0x1f", "0x19", "0x17", "0x18", "0x65"))
+        + '<0x17> <name> "Rick Grimes" .\n<0x18> <name> "Glenn Rhee" .\n'
+        '<0x19> <name> "Daryl Dixon" .\n<0x1f> <name> "Andrea" .\n'
+        '<0x17> <age> "15" .\n<0x18> <age> "15" .\n'
+        '<0x19> <age> "17" .\n<0x1f> <age> "19" .\n'),
+    # a var block runs for its variable and writes nothing, as in JSON
+    "var_block_writes_nothing": (
+        "{ var(func: uid(1)) { f as friend { name } } "
+        "q(func: uid(f), first: 2) { name } }",
+        '<0x17> <name> "Rick Grimes" .\n<0x18> <name> "Glenn Rhee" .\n'),
+}
+
+
+@pytest.mark.parametrize("name", sorted(RDF_PINS))
+def test_rdf_pinned_text(golden_ex, name):
+    query, want = RDF_PINS[name]
+    assert golden_ex().execute_rdf(query) == want
+
+
+def _group_jobs(sc, group: str, run) -> list[int]:
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rdf_job_bound(golden_ex, spark):
+    """RDF runs the level-at-a-time plan of execute(): no more Spark jobs
+    than the JSON answer to the same query, counted by job group, and
+    each job carries its level's description."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    for name in ("val_math_child", "ordered_child"):
+        q = RDF_PINS[name][0]
+        ex = golden_ex()
+        ex.execute(q)  # plan-cache and JIT warm-up
+        ex.execute_rdf(q)
+        rdf = _group_jobs(sc, f"golden-rdf-{name}", lambda: ex.execute_rdf(q))
+        js = _group_jobs(sc, f"golden-json-{name}", lambda: ex.execute(q))
+        assert len(rdf) <= len(js), (name, len(rdf), len(js))
+        assert {store.job(j).description().get() for j in rdf} == {"q L0", "q L1"}
+    q = "{ q(func: uid(0x1)) { name friend (first: 1, orderdesc: age) { name } } }"
+    ex = golden_ex()
+    ex.execute_rdf(q)
+    jobs = _group_jobs(sc, "golden-rdf-point-read", lambda: ex.execute_rdf(q))
+    assert len(jobs) <= POINT_READ_JOBS, len(jobs)
+
+
 def test_golden_error_cases(golden_ex):
     """Negative golden suite (tools/golden_extract_errors.py): 52
     must-error queries from query/query[0-4]_test.go. Each must raise;

@@ -404,6 +404,33 @@ def test_alter_drop_operations(spark):
     assert not g5.preds and not g5.schema.predicates
 
 
+def test_drop_attr_hides_wide_table_predicate(graph):
+    """A dropped predicate that lives in a wide node table is gone from
+    every read path: plain and fused attribute reads, root functions and
+    filters. The other layout hints survive the drop."""
+    from dgraph_spark.mutations import drop_attr, drop_data, drop_type
+    from dgraph_spark.plans import Executor
+    from dgraph_spark.sources.tpch_graph import uid_of
+
+    g = drop_attr(graph, "c_acctbal")
+    ex = Executor(g)
+    u = uid_of("customer", 7)
+    node = ex.execute(f"{{ q(func: uid({u})) {{ c_name c_acctbal }} }}")["q"][0]
+    assert "c_name" in node and "c_acctbal" not in node
+    two = ex.execute(
+        "{ q(func: type(Customer), first: 2) { c_name c_acctbal } }")["q"]
+    assert len(two) == 2 and not any("c_acctbal" in n for n in two)
+    assert not ex.execute("{ q(func: gt(c_acctbal, 0)) { uid } }").get("q")
+    assert not ex.execute("{ q(func: type(Customer), first: 5) "
+                          "@filter(gt(c_acctbal, 0)) { uid } }").get("q")
+    # the parent version still reads it
+    assert "c_acctbal" in Executor(graph).execute(
+        f"{{ q(func: uid({u})) {{ c_acctbal }} }}")["q"][0]
+    for v in (g, drop_type(graph, "Customer"), drop_data(graph)):
+        assert v.type_uid_ranges == graph.type_uid_ranges
+        assert v.wide_uid_key == graph.wide_uid_key
+
+
 def test_unique_predicate_enforced(spark):
     """@unique predicates reject a value already owned by another
     subject (edgraph/server.go:1776 verifyUnique); re-setting the SAME

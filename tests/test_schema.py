@@ -149,3 +149,23 @@ def test_bigfloat_math_ceil_floor_sqrt(spark):
         '   c : math(ceil(amount)) f : math(floor(amount)) } }')
     assert got2["me"][0]["c"] == Decimal(3)
     assert got2["me"][0]["f"] == Decimal(2)
+
+
+def test_bigfloat_rdf_writes_lexical_text(spark):
+    """RDF writes a bigfloat's stored lexical text, where JSON renders
+    the decimal that round-trips it."""
+    from decimal import Decimal
+
+    from dgraph_spark.plans import Executor
+
+    g = _bigfloat_graph(spark, [
+        '<0x1> <amount> "10.0000000000000000000123" .',
+        '<0x2> <amount> "1e3" .',
+    ], _BF_SCHEMA)
+    q = "{ q(func: has(amount)) { amount } }"
+    assert Executor(g).execute_rdf(q) == (
+        '<0x1> <amount> "10.0000000000000000000123" .\n'
+        '<0x2> <amount> "1e3" .\n')
+    assert Executor(g).execute(q) == {"q": [
+        {"amount": Decimal("10.0000000000000000000123")},
+        {"amount": Decimal("1000")}]}

@@ -168,7 +168,9 @@ def set_triples(graph: Graph, triples: DataFrame) -> Graph:
 
 
 def set_nquads(graph: Graph, nquads: str) -> Graph:
-    """`set { <nquads> }` convenience wrapper."""
+    """`set { <nquads> }` convenience wrapper. A line that is not one
+    well-formed N-Quad raises ValueError naming it; nothing is written."""
+    _check_nquads(nquads)
     return set_triples(graph, _triples_from_nquads(graph, nquads))
 
 
@@ -461,8 +463,7 @@ def mutate(graph: Graph, mutation_text: str) -> Graph:
     optional, either order). A line that is not one well-formed N-Quad
     raises ValueError naming it; nothing is written."""
     set_nq, del_nq = _split_mutation_blocks(mutation_text)
-    _check_nquads(set_nq)
-    _check_nquads(_star_object(del_nq))
+    _check_nquads(_star_object(del_nq))  # set_nquads checks the set section
     g = graph
     if set_nq.strip():
         g = set_nquads(g, set_nq)

@@ -24,12 +24,24 @@ Result modes:
     dgraph-shaped nested dicts from them (query/outputnode.go ToJson),
     execute_rdf() writes N-Quads from the same values and edge rows
     (query/outputrdf.go ToRDF).
+  - Var blocks run the same way, and the vars of a collected level with a
+    literal uid set are bound on the driver, as dgraph keeps uid lists
+    and uid -> value maps between scheduling rounds (query/query.go
+    populateVarMap): a uid var as its uid list, which uid(v) roots and
+    filters read as literals; a value var as a {uid: value} dict; an
+    aggregate over val() folded from the collected child rows. val() and
+    aggregate reads of a bound var need no Spark job. A level above
+    LITERAL_FRONTIER_MAX uids and its subtree, a var block with @cascade,
+    @recurse, shortest path or groupby or with no var to bind, a value
+    var that a read other than val() needs (math, ordering, functions,
+    uid()), and every var of execute_flat() keep the lazy binding (env).
   - execute_flat() -> flat DataFrame per block (oracle/hash-checkable):
     the lazy plan, lineage joins, one Spark plan per block.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import itertools
 import json
 import re
@@ -49,7 +61,7 @@ from dgraph_spark.dql.ast import (
 from dgraph_spark.dql.parser import parse_dql
 from dgraph_spark.model import (FACETS, OBJECT, SUBJECT, VALUE, Graph,
                                 SmallLoopConf)
-from dgraph_spark.plans.functions import FuncCompiler
+from dgraph_spark.plans.functions import FuncCompiler, _isin, uid_frame
 from dgraph_spark.plans.mathexpr import compile_math, math_vars
 
 SRC = "_src"
@@ -191,6 +203,9 @@ class Level:
     # the key each attr's values sit under — what execute_rdf() writes
     values: dict | None = None
     attr_keys: dict = field(default_factory=dict)
+    # a var block level (execute(), execute_rdf()): collected only when
+    # its subtree binds a var on the driver
+    binds_only: bool = False
 
 
 class Executor:
@@ -207,6 +222,14 @@ class Executor:
         # runaway @recurse or k-shortest silently OOMs the driver at 100x.
         self.limit_query_edge = limit_query_edge
         self.max_var_size = max_var_size
+        self._reset_query_state()
+
+    def _reset_query_state(self) -> None:
+        """Clear per-QUERY variable bindings so one Executor can serve many
+        queries (a long-lived session, the golden sweep, the bench). Vars
+        are scoped to a single request in the reference too
+        (query/query.go Request.vars is per-Process); leaking them across
+        executes silently rebinds same-named vars to stale domains."""
         self.env: dict[str, DataFrame] = {}
         # var name -> (edges DF of defining level) for level-aggregation
         self.var_edges: dict[str, DataFrame] = {}
@@ -231,27 +254,32 @@ class Executor:
         # instead of re-joining the node table — one lineage instead of
         # three for the level-agg pattern
         self.var_inrow: dict[str, str] = {}
-
-    def _reset_query_state(self) -> None:
-        """Clear per-QUERY variable bindings so one Executor can serve many
-        queries (a long-lived session, the golden sweep, the bench). Vars
-        are scoped to a single request in the reference too
-        (query/query.go Request.vars is per-Process); leaking them across
-        executes silently rebinds same-named vars to stale domains."""
-        self.env = {}
-        self.var_edges = {}
-        self.var_level = {}
-        self.var_agg = {}
-        self.scalar_vars = set()
-        self._blocks_run = 0
-        self.var_kind = {}
-        self.var_inrow = {}
-        # alias of the block execute() is encoding (job descriptions)
-        self._block_alias = None
+        # vars bound on the driver from a collected level (execute() and
+        # execute_rdf()), beside their lazy plans in `env`: uid var ->
+        # sorted uid list (`env` then holds its literal relation), value
+        # var -> {uid: value} (query/query.go populateVarMap)
+        self.var_uids: dict[str, list[int]] = {}
+        self.var_vals: dict[str, dict] = {}
         # value vars whose lexical strings are 200-bit bigfloats: math,
         # aggregation, ordering and rendering route through
         # functions/bigfloat.py instead of native column arithmetic
         self.var_bigfloat: set[str] = set()
+        # blocks run so far (_truncate_new_vars)
+        self._blocks_run = 0
+        # vars some block consumes, those read by val() and aggregates
+        # over it, which a driver-bound map serves, and those read any
+        # other way (_query_reads; all three set by _scheduled)
+        self._consumed_vars: set[str] = set()
+        self._driver_reads: set[str] = set()
+        self._lazy_reads: set[str] = set()
+        # alias of the block being run (job descriptions)
+        self._block_alias = None
+        # (home, condition) of the last root frontier that was one fused
+        # wide-table scan (_root_frontier -> _descend)
+        self._last_fused = None
+        # the last shortest-path result and its weight keys (_run_shortest)
+        self._last_shortest = None
+        self._last_shortest_wkeys: dict = {}
 
     # ================================================================ public
     def execute(self, query: str | ParsedQuery, vars: dict | None = None) -> dict:
@@ -266,7 +294,7 @@ class Executor:
                 else:
                     out["schema"] = self._schema_json(block)
             elif block.is_var_block:
-                self._tracked(self._run_block, block)
+                self._tracked(self._run_var_block, block)
             elif (result := self._tracked(self._block_json, block)) is not None:
                 out[block.alias] = result
         return out
@@ -286,6 +314,7 @@ class Executor:
             _validate_block_tree(b)
             _propagate_cascade(b)
         self._consumed_vars = set().union(set(), *(_block_needs(b) for b in pq.blocks))
+        self._driver_reads, self._lazy_reads = _query_reads(pq.blocks)
         return self._schedule(pq.blocks)
 
     def _tracked(self, run, block: Block):
@@ -309,11 +338,12 @@ class Executor:
         shared subtrees combinatorially, which looks like a hang. Only
         applied from the third block on, so one-var queries keep their
         fully-fused single plan."""
-        self._blocks_run = getattr(self, "_blocks_run", 0) + 1
+        self._blocks_run += 1
         if self._blocks_run <= self._VAR_TRUNCATE_AFTER:
             return
         for k, v in list(self.env.items()):
-            if k not in before and v is not None:
+            # a var bound on the driver is already a literal relation
+            if k not in before and v is not None and k not in self.var_uids:
                 self.env[k] = v.localCheckpoint(eager=False)
 
     def _schema_json(self, block: Block) -> list:
@@ -383,7 +413,10 @@ class Executor:
         for block in self._scheduled(query, vars, rdf=True):
             if block.is_schema:
                 continue
-            if block.is_var_block or block.shortest is not None:
+            if block.is_var_block:
+                self._tracked(self._run_var_block, block)
+                continue
+            if block.shortest is not None:
                 self._tracked(self._run_block, block)
                 continue
             self._block_alias = block.alias
@@ -481,10 +514,12 @@ class Executor:
         return ordered
 
     # ========================================================== block driver
-    def _run_block(self, block: Block, collect: bool = False) -> Level | None:
+    def _run_block(self, block: Block, collect: bool = False,
+                   binds_only: bool = False) -> Level | None:
         """Execute one top-level block tree, registering variables.
         ``collect``: materialize every level on the driver as it is
-        reached (execute()'s level-at-a-time mode, see _collect_level)."""
+        reached (execute()'s level-at-a-time mode, see _collect_level);
+        ``binds_only``: collect only for var binding (Level.binds_only)."""
         if block.shortest is not None:
             return self._run_shortest(block)
         frontier = self._root_frontier(block)
@@ -494,19 +529,51 @@ class Executor:
                 # side effects (env registration), discard the JSON
                 self._agg_only_json(block)
             return None
-        level = self._descend(block, frontier, root=True, collect=collect)
+        level = self._descend(block, frontier, root=True, collect=collect,
+                              binds_only=binds_only)
         if level is not None and _has_cascade(block):
             # the reference prunes the subgraph BEFORE variable assignment
             # (query.go Process: applyCascade then valueVarAggregation) —
             # vars defined under @cascade hold only surviving nodes. Only
             # pay the pruning pass when another block consumes such a var.
-            defs = _block_defines(block) & getattr(self, "_consumed_vars", set())
+            defs = _block_defines(block) & self._consumed_vars
             if defs:
                 self._cascade_rebind(level, defs)
         return level
 
+    def _run_var_block(self, block: Block) -> None:
+        """Run a var block of execute()/execute_rdf() for its variables.
+        It runs level at a time like a rendered block, and each level of
+        at most LITERAL_FRONTIER_MAX uids binds its vars on the driver
+        (_encode with render=False); a larger level keeps lazy bindings.
+        Only levels whose subtree binds a var are collected (Level.
+        binds_only), and a level of more rows than the cap is left
+        uncollected, with its subtree. A block with @cascade, @recurse,
+        shortest path or groupby, or with no var to bind, runs lazily."""
+        self._block_alias = block.alias
+        lazy = (block.shortest is not None or block.recurse is not None
+                or block.groupby is not None or _has_cascade(block)
+                or not self._binds_any(block, strict=True))
+        level = self._run_block(block, collect=not lazy, binds_only=True)
+        if level is not None and level.rows is not None:
+            self._encode(level, render=False)
+
+    def _binds_any(self, b: Block, strict: bool) -> bool:
+        """Whether a block subtree defines a var that binds on the driver: a
+        block's uid var that another block reads (its consumers read the
+        literal list), or a value var that val() reads need
+        (_binds_on_driver). ``strict`` (whether to collect a var block
+        at all) leaves out a value var some other read needs too: that
+        consumer re-runs its lazy plan anyway. Under a collected root
+        such a var still binds, for its val() reads."""
+        return b.var in self._consumed_vars or any(
+            self._binds_any(c, strict) if isinstance(c, Block)
+            else (c.var in self._driver_reads and self._binds_on_driver(c)
+                  and not (strict and c.var in self._lazy_reads))
+            for c in b.children)
+
     def _root_frontier(self, block: Block) -> DataFrame | None:
-        fc = FuncCompiler(self.g, self.env)
+        fc = FuncCompiler(self.g, self.env, self.var_uids)
         if block.func is None:
             # aggregation-only block reading vars: no frontier
             return None
@@ -628,6 +695,9 @@ class Executor:
             if lvl is None or id(lvl) not in in_subtree:
                 continue
             alive = lvl.edges.select(F.col(DST).alias(SUBJECT)).distinct()
+            # the pruned binding replaces any bound before pruning
+            self.var_uids.pop(name, None)
+            self.var_vals.pop(name, None)
             kind = self.var_kind.get(name)
             if kind == "block":
                 self.env[name] = alive
@@ -667,7 +737,7 @@ class Executor:
         )
 
     def _apply_filter(self, tree, frontier: DataFrame) -> DataFrame:
-        fc = FuncCompiler(self.g, self.env)
+        fc = FuncCompiler(self.g, self.env, self.var_uids)
         # a bare root frontier (just a distinct uid column, no edge
         # provenance / rank to preserve) IS its own candidate set: the
         # filtered candidates are the answer — skip the re-distinct and
@@ -684,13 +754,15 @@ class Executor:
     # ============================================================== descent
     def _descend(self, block: Block, frontier: DataFrame, root: bool,
                  parent: "Level | None" = None,
-                 dst_unique: bool = False, collect: bool = False) -> Level:
+                 dst_unique: bool = False, collect: bool = False,
+                 binds_only: bool = False) -> Level:
         """frontier: DataFrame with column _dst (+ _src when child level).
 
         Applies sort/pagination (unless deferred for cascade), registers
         block-level uid var, recurses into children. A level is collected
         before its children descend when ``collect`` (root) or its parent
-        was collected.
+        was collected, and, in a ``binds_only`` block, its subtree binds a
+        var on the driver.
         """
         if block.recurse is not None:
             return self._descend_recurse(block, frontier)
@@ -698,7 +770,8 @@ class Executor:
         subtree_cascade = _has_cascade(block)
         level = Level(block=block, edges=frontier, defer_pagination=subtree_cascade,
                       parent=parent, dst_unique=dst_unique,
-                      depth=0 if parent is None else parent.depth + 1)
+                      depth=0 if parent is None else parent.depth + 1,
+                      binds_only=binds_only if parent is None else parent.binds_only)
 
         # facet variables @facets(w as weight): registered BEFORE any
         # child descends so math() at this or deeper levels can resolve
@@ -719,7 +792,7 @@ class Executor:
                 self.env[var] = vdf
                 self.var_edges[var] = frontier
                 self.var_level[var] = level
-        if root and getattr(self, "_last_fused", None) is not None:
+        if root and self._last_fused is not None:
             # scan reuse is only sound while the node set is exactly the
             # fused scan's row set — pagination/order re-shapes it
             if not (block.first is not None or block.offset is not None
@@ -738,8 +811,22 @@ class Executor:
             self.var_kind[block.var] = "block"
 
         if block.groupby is None and (
-                collect if parent is None else parent.rows is not None):
-            self._collect_level(level, root)
+                collect if parent is None else parent.rows is not None) and (
+                not level.binds_only or self._binds_any(block, strict=False)):
+            cap = None
+            if level.binds_only:
+                # a var block level above the cap keeps its lazy binding,
+                # bar a root uid(...) of literals and bound vars (known size)
+                uids = (FuncCompiler(self.g, self.env, self.var_uids).uid_list(block.func)
+                        if root and block.func.name.lower() == "uid" else None)
+                if uids is None or len(uids) > LITERAL_FRONTIER_MAX:
+                    cap = LITERAL_FRONTIER_MAX
+            self._collect_level(level, root, cap)
+        if block.var and level.uids is not None:
+            # the level's collected uid list is the var (DestUIDs); its
+            # consumers read the list, not the level's plan
+            self.var_uids[block.var] = sorted(level.uids)
+            self.env[block.var] = uid_frame(self.spark, self.var_uids[block.var])
         nodes = self._nodes(level)
 
         # groupby blocks: no recursion below (aggregates only)
@@ -906,7 +993,7 @@ class Executor:
         if child.filter is not None:
             # type(T) leaves compile to free uid-range predicates even
             # with no in-row columns, so always try the in-row compile
-            inrow_cond = FuncCompiler(self.g, self.env).inrow_condition(
+            inrow_cond = FuncCompiler(self.g, self.env, self.var_uids).inrow_condition(
                 child.filter, dst_h or "", set(inrow_cols), DST)
             if inrow_cond is not None:
                 # filter evaluated in-row during the edge join — no node
@@ -2085,7 +2172,7 @@ class Executor:
             if filt is not None:
                 # @filter on a shortest edge block restricts the nodes the
                 # path may pass through (query/shortest.go copyFiltersRecurse)
-                fc = FuncCompiler(self.g, self.env)
+                fc = FuncCompiler(self.g, self.env, self.var_uids)
                 keep = fc.filter(filt, e.select(F.col(OBJECT).alias(SUBJECT)).distinct())
                 e = e.join(keep.select(F.col(SUBJECT).alias(OBJECT)), OBJECT, "left_semi")
             if wkey:
@@ -2454,7 +2541,10 @@ class Executor:
         for attr in ordered_attrs:
             if attr.name in _AGG_ATTRS and attr.val_var:
                 vdf = self.env.get(attr.val_var)
-                if vdf is None:
+                val = self._fold_var(attr.name, attr.val_var)
+                if val is not _NO_FOLD:
+                    pass  # folded on the driver from the var's map
+                elif vdf is None:
                     val = None  # var over an absent predicate: null result
                 elif attr.val_var in self.var_bigfloat:
                     # 200-bit aggregate; renders as the shortest decimal
@@ -2468,15 +2558,13 @@ class Executor:
                     ).collect()[0]["v"]
                     val = render_py(raw)
                 else:
-                    import datetime as _dtm
-
                     val = vdf.agg(_FNS[attr.name](VALUE).alias("v")).collect()[0]["v"]
-                    if isinstance(val, _dtm.datetime):
-                        # aggregates render like every other datetime:
-                        # RFC3339 (the raw collected object leaked before)
-                        val = _render_datetime(val)
-                    elif isinstance(val, _dtm.date):
-                        val = val.isoformat() + "T00:00:00Z"
+                if isinstance(val, _dt.datetime):
+                    # aggregates render like every other datetime:
+                    # RFC3339 (the raw collected object leaked before)
+                    val = _render_datetime(val)
+                elif isinstance(val, _dt.date):
+                    val = val.isoformat() + "T00:00:00Z"
                 if attr.var:
                     scalars[attr.var] = val
                     self._register_scalar_var(attr.var, val)
@@ -2502,8 +2590,9 @@ class Executor:
                     raise ValueError(
                         "Only aggregated variables allowed within empty "
                         "block.")
-                fn = _FNS[agg or "sum"]
-                scalars[v] = vdf.agg(fn(VALUE).alias("v")).collect()[0]["v"]
+                x = self._fold_var(agg or "sum", v)
+                scalars[v] = (x if x is not _NO_FOLD else vdf.agg(
+                    _FNS[agg or "sum"](VALUE).alias("v")).collect()[0]["v"])
             if any(scalars.get(n) is None for n in math_vars(attr.math)):
                 val = None
             else:
@@ -2522,6 +2611,7 @@ class Executor:
         (query/query.go:1053 'uid 0'); empty when the aggregate had no
         input."""
         self.scalar_vars.add(var)
+        self.var_vals[var] = {} if val is None else {-1: val}
         if val is None:
             self.env[var] = self.spark.createDataFrame(
                 [], f"{SUBJECT} long, {VALUE} double")
@@ -2530,14 +2620,16 @@ class Executor:
                 [(-1, val)], [SUBJECT, VALUE])
 
     # ======================================================= level collection
-    def _collect_level(self, level: Level, root: bool) -> None:
+    def _collect_level(self, level: Level, root: bool,
+                       row_cap: int | None = None) -> None:
         """Collect one level's edge rows to the driver (execute() only).
 
         A fused root collects its same-home attribute columns in the same
         scan (as _block_flat does). A level whose pagination waits for
         @cascade collects ranked but unpaged rows (_page_rows pages the
         survivors) and keeps the semi-join frontier, so its children see
-        exactly the node set they would without collection."""
+        exactly the node set they would without collection. A level of
+        more than ``row_cap`` rows is left uncollected (rows None)."""
         block = level.block
         if level.parent is not None and level.parent.rows == []:
             level.rows = []  # nothing to expand from: skip the job
@@ -2558,22 +2650,34 @@ class Executor:
                 edges = self.g.wide[home].where(cond).select(
                     F.col(SUBJECT).alias(DST), F.col(SUBJECT).alias(RANK),
                     *[F.col(c).alias(f"_f{i}") for i, (_a, c) in enumerate(items)])
+            # a child level with no order and no paging ranks its rows by
+            # uid under each parent: rank them here, so Spark prunes the
+            # per-parent window and its shuffle
+            by_uid = (level.parent is not None and not block.order
+                      and not (block.facets and block.facets.order)
+                      and block.first is None and block.offset is None
+                      and block.after is None)
+            edges = edges.drop(PATH, *([RANK] if by_uid else []))
             with self._job_desc(level):
-                level.rows = [r.asDict(recursive=True)
-                              for r in edges.drop(PATH).collect()]
+                if row_cap is None:
+                    rows = edges.collect()
+                else:
+                    # at most row_cap + 1 rows from each partition, in one
+                    # job: a limit() collect scans the partitions in
+                    # rounds, a job each (the low 33 bits of the id count
+                    # the rows of a partition)
+                    rows = edges.where(F.monotonically_increasing_id().bitwiseAND(
+                        (1 << 33) - 1) <= row_cap).collect()
+                    if len(rows) > row_cap:
+                        return
+            level.rows = [r.asDict(recursive=True) for r in rows]
+            if by_uid:
+                for r in level.rows:
+                    r[RANK] = r[DST]
         uids = list(dict.fromkeys(r[DST] for r in level.rows))
         if len(uids) <= LITERAL_FRONTIER_MAX and not level.defer_pagination:
             level.uids = uids
-            level.nodes = self._uid_frame(uids)
-
-    def _uid_frame(self, uids: list[int]) -> DataFrame:
-        """A literal (subject) relation: a VALUES table, planned as a local
-        relation (createDataFrame over a list builds a Python RDD instead,
-        measured seconds slower to join)."""
-        if not uids:
-            return self.spark.range(0).select(F.col("id").alias(SUBJECT))
-        vals = ", ".join(f"({u}L)" for u in uids)
-        return self.spark.sql(f"SELECT * FROM VALUES {vals} AS t({SUBJECT})")
+            level.nodes = uid_frame(self.spark, uids)
 
     def _literal_uids(self, nodes: DataFrame, level: Level | None) -> list[int] | None:
         """The uid list behind `nodes` when it is `level`'s literal set."""
@@ -2649,7 +2753,7 @@ class Executor:
         return groups
 
     # ========================================================= level encoding
-    def _encode(self, level: Level) -> dict:
+    def _encode(self, level: Level, render: bool = True) -> dict | None:
         """uid -> raw payload dict for every node of a collected level that
         survives @cascade: the attrs, then one list (or object) per child
         block — the dicts _clean()/_normalize() render (query/outputnode.go
@@ -2658,7 +2762,17 @@ class Executor:
         rows (a fused root's columns, in-row columns of the edge that
         reached the node) are taken from there. Those per-node values are
         kept on the level (Level.values) for execute_rdf(); the payload
-        renders bigfloats as decimals."""
+        renders bigfloats as decimals.
+
+        On a level with a literal uid set (Level.uids) the vars its attrs
+        define are bound on the driver from those values (_binds_on_driver),
+        and val() reads and aggregates of driver-bound vars are filled in
+        from the driver maps (_fold_val) with no Spark job. Child levels
+        are encoded first, so the vars they bind are there for this
+        level's aggregates. ``render=False`` (var blocks) reads only the
+        attrs whose vars bind on the driver and builds no payload."""
+        # a level collected as _descend reached it (not an @recurse round)
+        driver = level.uids is not None
         if level.rows is None:
             self._collect_level(level, root=level.parent is None)  # @recurse rounds
         block = level.block
@@ -2667,6 +2781,11 @@ class Executor:
         def required(name, out) -> bool:
             return casc is not None and (not casc or name in casc or out in casc)
 
+        cpays = {id(ch): self._encode(ch, render) for ch in level.children
+                 if ch.block.groupby is None and (render or ch.rows is not None)}
+        attrs = level.attr_items if render else [
+            a for a in level.attr_items
+            if driver and a.var in self._driver_reads and self._binds_on_driver(a)]
         nodes = self._nodes(level)
         vals: dict = {r[DST]: {} for r in level.rows}
         fields: list[str] = []   # payload keys
@@ -2675,15 +2794,19 @@ class Executor:
         level.attr_keys = {}
         rels: list[tuple[DataFrame, list[str]]] = []
         local: dict[str, tuple] = {}  # var -> (relation thunk, column)
+        binds: list[tuple[str, str]] = []  # (var, key) bound from `vals`
 
         def keep(attr: Attr, key: str) -> None:
             level.attr_keys[id(attr)] = key
             if self._is_bigfloat(attr):
                 bigfloat.add(key)
+            if (driver and attr.var and attr.val_var is None
+                    and self._binds_on_driver(attr)):
+                binds.append((attr.var, key))
 
         on_row = {a.out_name: k
                   for a, k in level.row_attrs + self._inrow_attrs(level)}
-        batch, rest = self._split_batchable(level.attr_items)
+        batch, rest = self._split_batchable(attrs)
         for home, items in batch.items():
             fetch = []
             for a, c in items:
@@ -2706,6 +2829,26 @@ class Executor:
         for attr in rest:
             if attr.math is not None:
                 continue
+            if attr.val_var is not None and (
+                    attr.name == "val" or attr.name in _AGG_ATTRS):
+                m = (self.var_vals.get(attr.val_var) if attr.name == "val"
+                     else self._fold_val(attr, level))
+                if m is not None:
+                    out = attr.out_name if attr.alias else (
+                        f"val({attr.val_var})" if attr.name == "val"
+                        else f"{attr.name}(val({attr.val_var}))")
+                    for u, d in vals.items():
+                        if u in m:
+                            d[out] = m[u]
+                    fields.append(out)
+                    level.attr_keys[id(attr)] = out
+                    if driver and attr.var and attr.name != "val":
+                        self.var_vals[attr.var] = m
+                    if required(attr.name, attr.out_name):
+                        checks.append(out)
+                    continue
+                if not render:
+                    continue  # an aggregate left to Spark binds lazily
             base = attr.name.lstrip("~")
             if (not attr.is_count and attr.val_var is None
                     and self.g.has_pred(base) and self.g.schema.get(base).is_uid):
@@ -2724,8 +2867,10 @@ class Executor:
                 for u in vals:
                     vals[u][out] = _uid_hex(u)
                 fields.append(out)
-                keep(attr, out)
-                if attr.var:
+                level.attr_keys[id(attr)] = out
+                if attr.var and driver:
+                    self.var_vals[attr.var] = {u: u for u in vals}
+                if attr.var and render:
                     col_df = self._attr_output(attr, nodes, level)[0]
                     local[attr.var] = (lambda d=col_df: d, out)
                 continue
@@ -2780,6 +2925,10 @@ class Executor:
             if required(attr.name, attr.out_name):
                 checks.append(out)
         self._collect_attrs(level, nodes, rels, vals)
+        for var, key in binds:
+            self.var_vals[var] = {u: d[key] for u, d in vals.items() if key in d}
+        if not render:
+            return None
 
         used_names: dict[str, int] = {}
         for child in level.children:
@@ -2800,7 +2949,7 @@ class Executor:
                             vals[r["_gsrc"]][key] = [
                                 {"@groupby": r.asDict(recursive=True)["_g"]}]
                 continue
-            cpay = self._encode(child)
+            cpay = cpays[id(child)]
             key = self._child_key(cb, used_names)
             fields.append(key)
             cnt_uid = next(
@@ -2831,6 +2980,69 @@ class Executor:
         return {u: {k: _render_bigfloat(v.get(k)) if k in bigfloat else v.get(k)
                     for k in fields}
                 for u, v in level.values.items()}
+
+    def _binds_on_driver(self, a: Attr) -> bool:
+        """Whether `v as <a>` can bind on the driver: the uid, a plain
+        scalar read or count(pred), whose values _encode reads as the same
+        (uid, value) rows the lazy binding (_attr_value_df) holds; or an
+        aggregate over val(), which binds when _fold_val folds it."""
+        if (a.var in self.var_bigfloat or a.math is not None
+                or a.expand is not None or a.pwd is not None):
+            return False
+        if a.val_var is not None:
+            return a.name in _AGG_ATTRS
+        if a.name == "uid":
+            return not a.is_count
+        if not self.g.has_pred(a.name.lstrip("~")):
+            return False
+        if a.is_count:
+            return True
+        meta = self.g.schema.get(a.name)
+        if meta.is_uid or meta.list or meta.typ == "password":
+            return False
+        if self.g.home_of(a.name) is not None and not a.langs:
+            return True  # a wide-table column, read raw
+        # a long-form read: _attr_output renders datetimes, gathers every
+        # language of name@* and drops values a facet filter fails
+        return (meta.typ != "datetime" and a.langs != ["*"]
+                and (a.facets is None or a.facets.filter is None))
+
+    def _fold_val(self, attr: Attr, level: Level) -> dict | None:
+        """``min|max|sum|avg(val(v))`` at ``level`` folded on the driver
+        from v's driver map: per parent over the collected rows of v's
+        level when v is defined one level below ``level`` or outside its
+        path, else one total for every node of ``level`` (the Spark plans
+        of _attr_output and _attr_value_df: query/query.go evalLevelAgg).
+        None leaves it to Spark: v not bound on the driver, defined more
+        than one level down, or values the driver does not fold (_fold)."""
+        v = attr.val_var
+        m = self.var_vals.get(v)
+        dl = self.var_level.get(v)
+        if m is None or (dl is level and v not in self.scalar_vars):
+            return None
+        chain = self._var_chain(v, level)
+        if chain is not None and len(chain) > 1:
+            return None
+        if dl is None or dl.parent is None:
+            total = self._fold_var(attr.name, v)
+            return None if total is _NO_FOLD else {r[DST]: total for r in level.rows}
+        groups: dict = {}
+        for r in dl.rows:
+            if r[DST] in m:
+                groups.setdefault(r[SRC], []).append(r[DST])
+        out = {}
+        for src, dsts in groups.items():
+            x = _fold(attr.name, [m[d] for d in sorted(dsts)])
+            if x is _NO_FOLD:
+                return None
+            out[src] = x
+        return out
+
+    def _fold_var(self, fn: str, v: str):
+        """``fn`` over all of v's values, from its driver map (_fold);
+        _NO_FOLD when v is not bound on the driver."""
+        m = self.var_vals.get(v)
+        return _NO_FOLD if m is None else _fold(fn, [m[u] for u in sorted(m)])
 
     def _collect_attrs(self, level: Level, nodes: DataFrame,
                        rels: list[tuple[DataFrame, list[str]]],
@@ -3534,19 +3746,25 @@ class Executor:
 
 
 # ---------------------------------------------------------------- helpers
-def _block_needs(b: Block) -> set[str]:
-    needed: set[str] = set()
+def _var_reads(b: Block) -> tuple[set[str], set[str], dict[str, str]]:
+    """The vars a block tree reads: (those read by val(v) or
+    min/max/sum/avg(val(v)) attrs, which a driver-bound map serves; those
+    read anywhere else — functions, uid(), orders, math, `x as val(v)`;
+    aggregate var -> the var it folds)."""
+    served: set[str] = set()
+    lazy: set[str] = set()
+    folds: dict[str, str] = {}
 
     def from_func(f: FuncCall | None):
         if f is None:
             return
         for a in f.args:
             if a.is_val_var or a.is_len:
-                needed.add(str(a.value))
+                lazy.add(str(a.value))
         if f.name == "uid":
             for a in f.args:
                 if isinstance(a.value, str) and not str(a.value).isdigit() and not str(a.value).startswith("0x"):
-                    needed.add(str(a.value))
+                    lazy.add(str(a.value))
         if f.name == "uid_in":
             # uid_in(pred, uid(v)): the uid-var args (everything after
             # the pred) are scheduling dependencies exactly like uid(v)
@@ -3555,7 +3773,7 @@ def _block_needs(b: Block) -> set[str]:
                 v = a.value
                 if (isinstance(v, str) and not v.isdigit()
                         and not v.startswith("0x")):
-                    needed.add(v)
+                    lazy.add(v)
 
     def from_tree(t):
         if t is None:
@@ -3570,18 +3788,51 @@ def _block_needs(b: Block) -> set[str]:
         from_tree(b.filter)
         for o in b.order:
             if o.is_var:
-                needed.add(o.key)
+                lazy.add(o.key)
         for c in b.children:
             if isinstance(c, Block):
                 walk(c)
             else:
                 if c.val_var:
-                    needed.add(c.val_var)
+                    # `x as val(v)` binds x lazily, from v's lazy plan
+                    if c.name in _AGG_ATTRS or (c.name == "val" and not c.var):
+                        served.add(c.val_var)
+                        if c.var:
+                            folds[c.var] = c.val_var
+                    else:
+                        lazy.add(c.val_var)
                 if c.math is not None:
-                    needed.update(math_vars(c.math))
+                    lazy.update(math_vars(c.math))
 
     walk(b)
-    return needed - _block_defines(b)
+    return served, lazy, folds
+
+
+def _block_needs(b: Block) -> set[str]:
+    served, lazy, _ = _var_reads(b)
+    return (served | lazy) - _block_defines(b)
+
+
+def _query_reads(blocks: list[Block]) -> tuple[set[str], set[str]]:
+    """The vars of a query read where a driver-bound map serves the read,
+    and those read any other way (_var_reads), the latter with the var
+    each such aggregate var folds: that consumer re-runs the var's plan
+    in `env`, which reads the folded var's plan."""
+    served: set[str] = set()
+    lazy: set[str] = set()
+    folds: dict[str, str] = {}
+    for b in blocks:
+        s, l, f = _var_reads(b)
+        served |= s
+        lazy |= l
+        folds.update(f)
+    todo = list(lazy)
+    while todo:
+        v = folds.get(todo.pop())
+        if v is not None and v not in lazy:
+            lazy.add(v)
+            todo.append(v)
+    return served, lazy
 
 
 def _block_defines(b: Block) -> set[str]:
@@ -3720,12 +3971,32 @@ def _has_cascade(b: Block) -> bool:
     return any(isinstance(c, Block) and _has_cascade(c) for c in b.children)
 
 
-def _isin(col: str, values: list[int]) -> Column:
-    """`col IN (values)`, parsed by Spark in one call: Column.isin makes
-    a py4j round trip per literal (0.5 s of driver time at 1000 uids)."""
-    if not values:
-        return F.lit(False)
-    return F.expr(f"`{col}` IN ({', '.join(map(str, values))})")
+_NO_FOLD = object()
+
+
+def _fold(fn: str, xs: list):
+    """min/max/sum/avg of a var's values (nulls skipped, None when none
+    are left), in uid order as dgraph folds them; _NO_FOLD for values
+    whose Spark aggregate the driver does not reproduce (decimals, NaN,
+    mixed types, sums of non-numbers)."""
+    xs = [x for x in xs if x is not None]
+    kinds = {bool if isinstance(x, bool) else
+             float if isinstance(x, (int, float)) else type(x) for x in xs}
+    if len(kinds) > 1 or any(x != x for x in xs):
+        return _NO_FOLD
+    kind = kinds.pop() if kinds else float
+    if fn in ("sum", "avg") and kind is not float:
+        return _NO_FOLD
+    if kind not in (bool, float, str, _dt.date, _dt.datetime):
+        return _NO_FOLD
+    if not xs:
+        return None
+    if fn == "min":
+        return min(xs)
+    if fn == "max":
+        return max(xs)
+    total = sum(xs)
+    return total if fn == "sum" else total / len(xs)
 
 
 def _by_rank(rows: list[dict]) -> list[dict]:

@@ -60,15 +60,24 @@ def _uid_literal(v) -> int | None:
     return None
 
 
-def _uid_literals(f: FuncCall) -> list[int] | None:
-    """All uid(...) args as literals, or None if any arg is a variable."""
-    out = []
-    for a in f.args:
-        u = _uid_literal(a.value)
-        if u is None:
-            return None
-        out.append(u)
-    return out
+def _isin(col: str, values: list[int]) -> Column:
+    """`col IN (values)`, parsed by Spark in one call: Column.isin makes
+    a py4j round trip per literal (0.5 s of driver time at 1000 uids)."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(str, values))})")
+
+
+def uid_frame(spark, uids: list[int]) -> DataFrame:
+    """A literal (subject) relation: a VALUES table, planned as a local
+    relation (createDataFrame over a list builds a Python RDD instead,
+    measured seconds slower to join), which collects with no Spark job."""
+    if not uids:
+        return spark.range(0).select(F.col("id").alias(SUBJECT))
+    vals = ", ".join(f"({u}L)" for u in uids)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({SUBJECT})")
+
+
 _STRSEARCH = {"anyofterms", "allofterms", "anyoftext", "alloftext",
               "regexp", "match", "ngram"}
 
@@ -76,11 +85,28 @@ _STRSEARCH = {"anyofterms", "allofterms", "anyoftext", "alloftext",
 class FuncCompiler:
     """Compiles FuncCalls into uid DataFrames, resolving variables from
     ``env`` (uid vars -> DataFrame[subject], value vars ->
-    DataFrame[subject, value])."""
+    DataFrame[subject, value]). A uid var bound on the driver (``uids``:
+    var -> uid list) reads in uid(...) as its literal uids."""
 
-    def __init__(self, graph: Graph, env: dict | None = None):
+    def __init__(self, graph: Graph, env: dict | None = None,
+                 uids: dict | None = None):
         self.g = graph
         self.env = env if env is not None else {}
+        self.uids = uids if uids is not None else {}
+
+    def uid_list(self, f: FuncCall) -> list[int] | None:
+        """All uid(...) args as uids: the literals and the lists of vars
+        bound on the driver; None if any arg is a lazy var."""
+        out: list[int] = []
+        for a in f.args:
+            u = _uid_literal(a.value)
+            if u is not None:
+                out.append(u)
+            elif str(a.value) in self.uids:
+                out.extend(self.uids[str(a.value)])
+            else:
+                return None
+        return out
 
     # ------------------------------------------------------------- helpers
     def _cmp_side(self, pred, col, lits):
@@ -167,6 +193,8 @@ class FuncCompiler:
                     return candidates.where(
                         (F.col(SUBJECT) >= rng[0]) & (F.col(SUBJECT) < rng[1])
                     )
+            if f.name.lower() == "uid" and (uids := self.uid_list(f)) is not None:
+                return candidates.where(_isin(SUBJECT, uids))
             return self._eval(tree.func, candidates)
         if tree.op == "and":
             out = candidates
@@ -205,8 +233,8 @@ class FuncCompiler:
             # uid(literals...) whose uids all fall in ONE type-tagged uid
             # range -> a plain subject IN (...) filter on that type's wide
             # scan: one stage, no Python-RDD literal frame, no broadcast
-            # of the node table. (Var args / mixed types: not fusible.)
-            lits = _uid_literals(f)
+            # of the node table. (Lazy var args / mixed types: not fusible.)
+            lits = self.uid_list(f)
             if not lits:
                 return None
             homes = set()
@@ -270,6 +298,10 @@ class FuncCompiler:
                 return None
             if f.pred_lang:
                 return None
+            if f.name.lower() == "uid":
+                # a literal uid set is a membership test on the target uid
+                uids = self.uid_list(f)
+                return None if uids is None else _isin(dst_col, uids)
             if f.name.lower() == "type":
                 rng = self.g.type_uid_ranges.get(str(f.args[0].value))
                 if rng is None:
@@ -515,17 +547,25 @@ class FuncCompiler:
     def _uid(self, f: FuncCall) -> DataFrame:
         frames: list[DataFrame] = []
         lits: list[int] = []
+        bound = False
         for a in f.args:
             u = _uid_literal(a.value)
             if u is not None:
                 lits.append(u)
+            elif str(a.value) in self.uids:
+                lits.extend(self.uids[str(a.value)])
+                bound = True
             else:
                 frames.append(self._uid_var(str(a.value)))
+        if not lits and not frames:
+            return self._empty_uids()  # vars bound to no uids
         if lits:
             # inline literal relation (pure SQL, no Python-RDD round-trip);
-            # deduped driver-side so no distinct shuffle is needed below
+            # deduped driver-side so no distinct shuffle is needed below.
+            # A bound var's list (up to LITERAL_FRONTIER_MAX uids) is one
+            # parsed VALUES relation: F.lit costs a py4j call per uid
             uniq = list(dict.fromkeys(lits))
-            lit_df = self.g.spark.range(1).select(
+            lit_df = uid_frame(self.g.spark, uniq) if bound else self.g.spark.range(1).select(
                 F.explode(F.array(*[F.lit(u).cast("long") for u in uniq])).alias(SUBJECT)
             )
             if not frames:

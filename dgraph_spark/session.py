@@ -21,6 +21,10 @@ def get_spark(app_name: str = "dgraph-spark", master: str | None = None) -> Spar
       cluster this would be set to ~2-3x total cores by the submitter.
     - Arrow enabled: every pandas-UDF operator (minhash, vector ops) moves
       data in columnar batches.
+    - DataFrame call-site capture off: with it on, every DataFrame API
+      call makes extra py4j round trips to record its Python call site
+      for error messages (about half the py4j calls of a point read). It
+      is a static conf, so it is set here, at session build.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -41,5 +45,6 @@ def get_spark(app_name: str = "dgraph-spark", master: str | None = None) -> Spar
         # dgraph predicate names and query aliases are case-SENSITIVE
         # (`Friend: name` and a `friend` edge may coexist in one block)
         .config("spark.sql.caseSensitive", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

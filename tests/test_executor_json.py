@@ -39,6 +39,10 @@ def test_count_uid_root(executor):
 
 
 def test_agg_block(executor):
+    """A var block above LITERAL_FRONTIER_MAX uids keeps the lazy binding;
+    its root aggregates still match DuckDB."""
+    from dgraph_spark.plans.executor import LITERAL_FRONTIER_MAX
+
     r = executor.execute('''
     {
       var(func: type(Order)) { t as o_totalprice }
@@ -46,7 +50,12 @@ def test_agg_block(executor):
     }''')
     # one single-key node per aggregate (query/outputnode.go shape)
     out = {k: v for d in r["s"] for k, v in d.items()}
-    assert out["total"] > 0 and out["mn"] > 0
+    n, total, mn = duckdb.sql(
+        f"SELECT count(*), sum(o_totalprice), min(o_totalprice) "
+        f"FROM '{SF_SMALL}/orders.parquet'").fetchone()
+    assert n > LITERAL_FRONTIER_MAX
+    assert out["total"] == pytest.approx(total, rel=1e-12)
+    assert out["mn"] == mn
 
 
 def test_groupby_json(executor):
@@ -286,3 +295,98 @@ def test_rdf_inrow_child_attr(executor):
         '<0x30000000011> <c_name> "Customer#000000017" .\n'
         '<0x30000000039> <c_name> "Customer#000000057" .\n'
         '<0x30000000049> <c_name> "Customer#000000073" .\n')
+
+
+def _duck(sql: str, *params):
+    return duckdb.execute(sql.replace("{sf}", SF_SMALL), list(params)).fetchall()
+
+
+@pytest.mark.parametrize("key", [1, 2, 7])
+def test_var_block_level_aggregates_match_duckdb(executor, key):
+    """Serving's `agg` shape with every aggregate: the var block runs
+    level at a time and binds p, ot, mn, mx and av on the driver; the
+    consumer's aggregates fold from those maps."""
+    u = uid_of("customer", key)
+    r = executor.execute(
+        f'{{ var(func: uid({u})) {{ placed {{ line {{ p as l_extendedprice }} '
+        f'ot as sum(val(p)) mn as min(val(p)) mx as max(val(p)) av as avg(val(p)) }} }} '
+        f'q(func: uid({u})) {{ c_name total: sum(val(ot)) lo: min(val(mn)) '
+        f'hi: max(val(mx)) mean: avg(val(av)) }} }}')
+    name, total, lo, hi, mean = _duck(
+        "WITH per AS (SELECT o_orderkey, sum(l_extendedprice) s, "
+        "avg(l_extendedprice) a, min(l_extendedprice) mn, max(l_extendedprice) mx "
+        "FROM '{sf}/orders.parquet' JOIN '{sf}/lineitem.parquet' "
+        "ON l_orderkey = o_orderkey WHERE o_custkey = ? GROUP BY o_orderkey) "
+        "SELECT (SELECT c_name FROM '{sf}/customer.parquet' WHERE c_custkey = ?), "
+        "sum(s), min(mn), max(mx), avg(a) FROM per", key, key)[0]
+    (node,) = r["q"]
+    assert node["c_name"] == name
+    assert node["total"] == pytest.approx(total, rel=1e-12)
+    assert node["lo"] == lo and node["hi"] == hi
+    assert node["mean"] == pytest.approx(mean, rel=1e-12)
+
+
+def test_uid_var_root_and_filter_match_duckdb(executor):
+    """A uid var bound by a var block feeds a uid(v) root and a
+    uid(v) filter as its driver-side uid list."""
+    key = 3
+    u = uid_of("customer", key)
+    r = executor.execute(
+        f'{{ var(func: uid({u})) {{ o as placed @filter(gt(o_totalprice, 150000.0)) {{ o_totalprice }} }} '
+        f'big(func: uid(o), orderdesc: o_totalprice) {{ o_totalprice }} '
+        f'rest(func: uid({u})) {{ placed @filter(NOT uid(o)) {{ o_totalprice }} }} }}')
+    big = [n["o_totalprice"] for n in r["big"]]
+    rest = [n["o_totalprice"] for n in r["rest"][0]["placed"]]
+    want_big = [p for (p,) in _duck(
+        "SELECT o_totalprice FROM '{sf}/orders.parquet' WHERE o_custkey = ? "
+        "AND o_totalprice > 150000 ORDER BY o_totalprice DESC", key)]
+    want_rest = [p for (p,) in _duck(
+        "SELECT o_totalprice FROM '{sf}/orders.parquet' WHERE o_custkey = ? "
+        "AND o_totalprice <= 150000 ORDER BY o_orderkey", key)]
+    assert big == want_big and rest == want_rest
+    assert big and rest  # both sides of the filter are covered
+
+
+def test_var_block_level_above_cap_stays_lazy(executor):
+    """A uid-rooted var block whose `line` level crosses
+    LITERAL_FRONTIER_MAX: the levels above it bind on the driver, that
+    level and the vars on it keep their lazy plans (nothing bound on the
+    driver), and every consumer still matches DuckDB."""
+    from dgraph_spark.plans.executor import LITERAL_FRONTIER_MAX
+
+    region = 0
+    r = executor.execute(
+        f'{{ var(func: uid({uid_of("region", region)})) {{ ~in_region {{ ~in_nation {{ '
+        f'o as placed {{ l as line {{ p as l_extendedprice }} ot as sum(val(p)) }} }} }} }} '
+        f's() {{ total: sum(val(ot)) }} '
+        f'cheap(func: uid(o), orderasc: o_totalprice, first: 2) {{ o_totalprice }} '
+        f'n(func: uid(l)) {{ count(uid) }} }}')
+    scope = ("FROM '{sf}/nation.parquet' JOIN '{sf}/customer.parquet' "
+             "ON c_nationkey = n_nationkey JOIN '{sf}/orders.parquet' "
+             "ON o_custkey = c_custkey ")
+    (n_orders,) = _duck("SELECT count(*) " + scope + "WHERE n_regionkey = ?", region)[0]
+    n_lines, total = _duck(
+        "SELECT count(*), sum(l_extendedprice) " + scope
+        + "JOIN '{sf}/lineitem.parquet' ON l_orderkey = o_orderkey "
+        "WHERE n_regionkey = ?", region)[0]
+    cheap = [p for (p,) in _duck(
+        "SELECT o_totalprice " + scope + "WHERE n_regionkey = ? "
+        "ORDER BY o_totalprice LIMIT 2", region)]
+    assert n_orders <= LITERAL_FRONTIER_MAX < n_lines
+    assert len(executor.var_uids["o"]) == n_orders
+    assert "l" not in executor.var_uids
+    assert not {"p", "ot"} & set(executor.var_vals)
+    assert r["s"] == [{"total": pytest.approx(total, rel=1e-12)}]
+    assert [n["o_totalprice"] for n in r["cheap"]] == cheap
+    assert r["n"] == [{"count": n_lines}]
+
+
+def test_var_block_over_lazy_uid_root_stays_lazy(executor):
+    """A var block rooted at uid(O), O a var above LITERAL_FRONTIER_MAX:
+    the root is not collected, so nothing under it binds on the driver."""
+    r = executor.execute(
+        '{ O as var(func: type(Order)) var(func: uid(O)) { line { p as l_extendedprice } } '
+        's() { total: sum(val(p)) } }')
+    (total,) = _duck("SELECT sum(l_extendedprice) FROM '{sf}/lineitem.parquet'")[0]
+    assert "O" not in executor.var_uids and "p" not in executor.var_vals
+    assert r["s"] == [{"total": pytest.approx(total, rel=1e-12)}]

@@ -136,6 +136,29 @@ def test_point_read_job_bound(golden_ex, spark):
     assert {store.job(j).description().get() for j in jobs} == {"q L0", "q L1"}
 
 
+# Spark jobs of a var block with a level aggregate and a root consumer:
+# the var block's two levels and its `age` read, the consumer's root and
+# its `name` read. Both aggregates fold on the driver from the var block's
+# bound vars; with a lazy var block the consumer's read re-ran the var's
+# plan (6 jobs).
+VAR_BLOCK_JOBS = 5
+
+
+def test_var_block_job_bound(golden_ex, spark):
+    sc = spark.sparkContext
+    q = ("{ var(func: uid(0x1)) { friend { a as age } s as sum(val(a)) } "
+         "q(func: uid(0x1)) { name total: sum(val(s)) } }")
+    ex = golden_ex()
+    ex.execute(q)  # plan-cache and JIT warm-up
+    got = []
+    jobs = _group_jobs(sc, "golden-var-block", lambda: got.append(ex.execute(q)))
+    assert got == [{"q": [{"name": "Michonne", "total": 66}]}]
+    assert len(jobs) <= VAR_BLOCK_JOBS, len(jobs)
+    store = sc._jsc.sc().statusStore()
+    assert {store.job(j).description().get() for j in jobs} == {
+        "var L0", "var L1", "q L0"}
+
+
 def test_golden_facets_cases(golden_facets_ex):
     """The reference's whole facets suite (query_facets_test.go), live."""
     cases = {c["name"]: c for c in _load("cases_facets.json")}

@@ -527,6 +527,31 @@ def test_mutation_rejects_unparsable_line(spark):
     assert g2.pred("p1").count() == 1 and g2.pred("p2").count() == 1
 
 
+def test_set_nquads_rejects_unparsable_line(spark):
+    """set_nquads checks its lines like mutate(): a line that is not one
+    N-Quad raises, naming it, and nothing is written; bulk loads keep
+    the chunker's drop behaviour."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from dgraph_spark.sources.rdf import load_rdf_graph
+
+    g = _graph(spark, '<0x1> <name> "Alice" .')
+    with pytest.raises(ValueError, match="p2"):
+        set_nquads(g, '<0x1> <p1> "x" .\n<0x1> <p2> oops .\n')
+    assert not g.has_pred("p1")
+    g2 = set_nquads(g, '# comment\n<0x1> <p1> "x" .\n')
+    assert g2.pred("p1").count() == 1
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "bulk.nq")
+        with open(path, "w") as f:
+            f.write('<0x1> <name> "Alice" .\n<0x1> <p2> oops .\n')
+        bulk = load_rdf_graph(spark, path, "")
+        assert bulk.pred("name").count() == 1 and not bulk.has_pred("p2")
+
+
 def test_write_leaves_parent_schema_unchanged(spark):
     """Graph versions are immutable, schema included: a write that adds
     uid predicate `e` registers it on the new version only."""

@@ -12,6 +12,12 @@ Mirrors the reference's execution lifecycle (SURVEY.md §3.1) Spark-first:
     (worker/sort.go, query/query.go:2493 applyPagination).
   - @cascade defers pagination until after pruning
     (query/query.go:3004-3011).
+  - One kernel builds the (subject, value) relation of val(),
+    min/max/sum/avg(val()) and math() (_attr_value_df): a var binds it
+    and _attr_output renders it under its output key, so a value and
+    the var of the same aggregate agree. A var defined further down is
+    carried up along the levels in between (_carry, query/query.go
+    transformTo and evalLevelAgg).
 
 Result modes:
   - execute() and execute_rdf() share one level encoder. A block runs
@@ -139,6 +145,17 @@ class ResourceLimitError(RuntimeError):
 
 _AGG_ATTRS = {"min", "max", "sum", "avg"}
 
+
+def _agg_fn(name: str, bigfloat: bool = False):
+    """The Spark aggregate behind min/max/sum/avg; over lexical bigfloat
+    values the 200-bit one (functions/bigfloat.py)."""
+    if bigfloat:
+        from dgraph_spark.functions.bigfloat import bigfloat_agg
+
+        return bigfloat_agg(name)
+    return {"min": F.min, "max": F.max, "sum": F.sum, "avg": F.avg}[name]
+
+
 _INROW_FILTER_FUNCS = {"eq", "le", "lt", "ge", "gt", "between", "has",
                        "anyofterms", "allofterms", "regexp", "match",
                        "anyoftext", "alloftext", "ngram"}
@@ -222,6 +239,9 @@ class Executor:
         # runaway @recurse or k-shortest silently OOMs the driver at 100x.
         self.limit_query_edge = limit_query_edge
         self.max_var_size = max_var_size
+        # (facet key, snapshot of the probed relation) -> a sample value
+        # (_typed_facet); lives across requests
+        self._facet_type_cache: dict = {}
         self._reset_query_state()
 
     def _reset_query_state(self) -> None:
@@ -477,7 +497,7 @@ class Executor:
                 groups = self._reached(child, set(subjects))
                 for src in sorted(groups):
                     lines.extend(
-                        f"<{_uid_hex(src)}> <{c.alias}> <{_uid_hex(r[DST])}> .\n"
+                        f"<{_uid_hex(src)}> <{_child_name(c)}> <{_uid_hex(r[DST])}> .\n"
                         for r in groups[src])
                 self._rdf_level(child, sorted({r[DST] for rs in groups.values() for r in rs}),
                                 lines)
@@ -1158,6 +1178,14 @@ class Executor:
             self.var_kind[attr.var] = "value"
             self.var_inrow[attr.var] = inrow
             return
+        if (attr.name in _AGG_ATTRS and attr.val_var in self.env
+                and self.var_level.get(attr.val_var) is level
+                and attr.val_var not in self.scalar_vars):
+            # the var is defined by a SIBLING at this very level — there
+            # is no child level to aggregate over
+            # (query/query.go:1099 evalLevelAgg relSG search)
+            raise ValueError(
+                "Invalid variable aggregation. Check the levels.")
         vdf = self._attr_value_df(attr, nodes, level)
         if vdf is not None:
             if (self.g.schema.strict and not attr.is_count
@@ -1261,7 +1289,9 @@ class Executor:
         )
 
     def _attr_value_df(self, attr: Attr, nodes: DataFrame, level: Level) -> DataFrame | None:
-        """DataFrame (subject, value) for a scalar-ish attr over `nodes`."""
+        """DataFrame (subject, value) for a scalar-ish attr over `nodes`:
+        the one builder of val(), aggregate and math() values, which both
+        a var (_register_attr_var) and the output (_attr_output) read."""
         if attr.name == "uid" and attr.is_count:
             # `s as count(uid)`: ONE value keyed by the sentinel uid
             # MaxUint64 (= -1 in our signed-long uid space) — math()
@@ -1281,46 +1311,28 @@ class Executor:
             # pagination / @lang all apply to `v as count(p)` too
             return self._count_per_parent(attr, nodes, VALUE, level)
         if attr.val_var is not None and attr.name == "val":
-            return self.env[attr.val_var]
+            # a direct map lookup by uid: path propagation applies only to
+            # math() and aggregates (query/query.go preTraverse reads
+            # Params.uidToVal[uid] verbatim)
+            return self.env.get(attr.val_var)
         if attr.name in _AGG_ATTRS and attr.val_var:
-            # `s as sum(val(t))` — per-parent aggregation of a child-level
-            # var, registered as a value variable on THIS level's nodes
-            # (query/query.go:1042 evalLevelAgg feeding populateUidValVar)
-            vdf = self.env.get(attr.val_var)
-            def_edges = self.var_edges.get(attr.val_var)
+            # `sum(val(v))`: per parent of the last level between this
+            # level and v's definition, the levels in between summed first
+            # (query/query.go:1143 transformTo, :1042 evalLevelAgg); v
+            # defined off this level's path aggregates along its defining
+            # edges, or, at a root, in one total for every node
+            v = attr.val_var
+            vdf = self.env.get(v)
             if vdf is None:
                 return None
-            def_level = self.var_level.get(attr.val_var)
-            if def_level is level and attr.val_var not in self.scalar_vars:
-                # the var is defined by a SIBLING at this very level —
-                # there is no child level to aggregate over
-                # (query/query.go:1099 evalLevelAgg relSG search)
-                raise ValueError(
-                    "Invalid variable aggregation. Check the levels.")
-            fn = {"min": F.min, "max": F.max, "sum": F.sum, "avg": F.avg}[attr.name]
-            if attr.val_var in self.var_bigfloat:
-                # 200-bit aggregation over the var's lexical strings
-                from dgraph_spark.functions.bigfloat import bigfloat_agg
-
-                fn = bigfloat_agg(attr.name)
-            inrow = self.var_inrow.get(attr.val_var)
-            if (def_edges is not None and SRC in def_edges.columns
-                    and inrow and inrow in def_edges.columns):
-                # the var's values ride in-row on its defining edges:
-                # per-parent aggregation is one groupBy of that relation
-                return (
-                    def_edges.groupBy(SRC).agg(fn(inrow).alias(VALUE))
-                    .select(F.col(SRC).alias(SUBJECT), VALUE)
-                )
-            if def_edges is not None and SRC in def_edges.columns:
-                return (
-                    def_edges.select(SRC, DST)
-                    .join(vdf.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
-                    .groupBy(SRC)
-                    .agg(fn(VALUE).alias(VALUE))
-                    .select(F.col(SRC).alias(SUBJECT), VALUE)
-                )
-            total = vdf.agg(fn(VALUE).alias(VALUE))
+            chain = self._var_chain(v, level)
+            hops = ([lvl.edges for lvl in chain] if chain
+                    else [e for e in [self.var_edges.get(v)]
+                          if e is not None and SRC in e.columns])
+            if hops:
+                return self._carry(v, hops, attr.name)
+            total = vdf.agg(
+                _agg_fn(attr.name, v in self.var_bigfloat)(VALUE).alias(VALUE))
             return nodes.crossJoin(F.broadcast(total))
         if attr.math is not None:
             return self._math_value_df(attr, nodes, level)
@@ -1369,19 +1381,7 @@ class Executor:
             return None
         chain = self._var_chain(varname, level)
         if chain:
-            out = vdf
-            for lvl in chain:
-                e = lvl.edges
-                if SRC not in e.columns:
-                    return out
-                out = (
-                    e.select(SRC, DST)
-                    .join(out.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
-                    .groupBy(SRC)
-                    .agg(F.sum(VALUE).alias(VALUE))
-                    .select(F.col(SRC).alias(SUBJECT), VALUE)
-                )
-            return out
+            return self._carry(varname, [lvl.edges for lvl in chain])
         # downward: walk from `level` up to the defining level, then
         # push values down through each traversal's edges
         dl = self.var_level.get(varname)
@@ -1406,6 +1406,29 @@ class Executor:
                 .agg(F.sum(VALUE).alias(VALUE))
                 .select(F.col(DST).alias(SUBJECT), VALUE)
             )
+        return out
+
+    def _carry(self, v: str, hops: list[DataFrame], fn: str = "sum") -> DataFrame:
+        """Value var v carried up ``hops`` (edge relations, v's defining
+        level first) to the sources of the last one: summed over each
+        hop's edges, ``fn`` at the last (query/query.go:1143 transformTo),
+        at 200 bits for a bigfloat var. v's values ride in-row on its
+        defining edges when it was read off the traversal join: the first
+        hop then needs no join."""
+        out = self.env[v]
+        inrow = self.var_inrow.get(v)
+        bigfloat = v in self.var_bigfloat
+        for i, e in enumerate(hops):
+            if SRC not in e.columns:
+                return out
+            if i == 0 and inrow in e.columns:
+                rows = e.select(SRC, F.col(inrow).alias(VALUE))
+            else:
+                rows = e.select(SRC, DST).join(
+                    out.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
+            agg = _agg_fn(fn if i == len(hops) - 1 else "sum", bigfloat)
+            out = (rows.groupBy(SRC).agg(agg(VALUE).alias(VALUE))
+                   .select(F.col(SRC).alias(SUBJECT), VALUE))
         return out
 
     def _math_value_df(self, attr: Attr, nodes: DataFrame, level: Level | None = None) -> DataFrame:
@@ -1502,9 +1525,7 @@ class Executor:
         parent edges (query/query.go populateUidValVar aggregateValue);
         non-summable types keep one value (max, deterministic)."""
         col = F.col(f"facets.{key}")
-        cache = getattr(self, "_facet_type_cache", None)
-        if cache is None:
-            cache = self._facet_type_cache = {}
+        cache = self._facet_type_cache
         # Snapshot-keyed like the dedup caches (_corpus_key): a mutation
         # that swaps graph.preds[p] for a new DataFrame changes the plan
         # hash, an in-place parquet rewrite changes the mtime snapshot —
@@ -2530,7 +2551,6 @@ class Executor:
         the block-local scalars, falling back to collapsing an
         environment var with ITS defining aggregate — never a blanket
         SUM."""
-        _FNS = {"min": F.min, "max": F.max, "sum": F.sum, "avg": F.avg}
         # each aggregate / math renders as its OWN single-key node, in
         # query order: me() {min(val(a)) max(val(a))} ->
         # [{"min(val(a))": x}, {"max(val(a))": y}] (query/outputnode.go
@@ -2546,19 +2566,14 @@ class Executor:
                     pass  # folded on the driver from the var's map
                 elif vdf is None:
                     val = None  # var over an absent predicate: null result
-                elif attr.val_var in self.var_bigfloat:
-                    # 200-bit aggregate; renders as the shortest decimal
-                    # that round-trips (TestBigFloatSum/Avg/Max pin the
-                    # exact digit strings)
-                    from dgraph_spark.functions.bigfloat import (bigfloat_agg,
-                                                                 render_py)
-
-                    raw = vdf.agg(
-                        bigfloat_agg(attr.name)(F.col(VALUE)).alias("v")
-                    ).collect()[0]["v"]
-                    val = render_py(raw)
                 else:
-                    val = vdf.agg(_FNS[attr.name](VALUE).alias("v")).collect()[0]["v"]
+                    bigfloat = attr.val_var in self.var_bigfloat
+                    val = vdf.agg(_agg_fn(attr.name, bigfloat)(VALUE).alias("v")
+                                  ).collect()[0]["v"]
+                    if bigfloat:
+                        # the shortest decimal that round-trips
+                        # (TestBigFloatSum/Avg/Max pin the exact digits)
+                        val = _render_bigfloat(val)
                 if isinstance(val, _dt.datetime):
                     # aggregates render like every other datetime:
                     # RFC3339 (the raw collected object leaked before)
@@ -2570,7 +2585,7 @@ class Executor:
                     self._register_scalar_var(attr.var, val)
                 # unaliased key is the full form `sum(val(a))`
                 # (query/outputnode.go aggregate key naming)
-                out.append({attr.alias or f"{attr.name}(val({attr.val_var}))": val})
+                out.append({_value_key(attr): val})
         for attr in ordered_attrs:
             if attr.math is None:
                 continue
@@ -2592,14 +2607,13 @@ class Executor:
                         "block.")
                 x = self._fold_var(agg or "sum", v)
                 scalars[v] = (x if x is not _NO_FOLD else vdf.agg(
-                    _FNS[agg or "sum"](VALUE).alias("v")).collect()[0]["v"])
+                    _agg_fn(agg or "sum")(VALUE).alias("v")).collect()[0]["v"])
             if any(scalars.get(n) is None for n in math_vars(attr.math)):
                 val = None
             else:
                 col = compile_math(attr.math, lambda n: F.lit(scalars[n]))
                 val = self.spark.range(1).select(col.alias("v")).collect()[0]["v"]
-            key = attr.out_name if attr.alias else (
-                f"val({attr.var})" if attr.var else "math")
+            key = _value_key(attr)
             if attr.var:
                 self._register_scalar_var(attr.var, val)
             out.append({key: val})
@@ -2834,9 +2848,7 @@ class Executor:
                 m = (self.var_vals.get(attr.val_var) if attr.name == "val"
                      else self._fold_val(attr, level))
                 if m is not None:
-                    out = attr.out_name if attr.alias else (
-                        f"val({attr.val_var})" if attr.name == "val"
-                        else f"{attr.name}(val({attr.val_var}))")
+                    out = _value_key(attr)
                     for u, d in vals.items():
                         if u in m:
                             d[out] = m[u]
@@ -2891,8 +2903,7 @@ class Executor:
             if needed <= set(local) and not (needed & self.var_bigfloat):
                 # every operand is an attr of this level: one projection
                 # over the operand columns instead of the var-join plan
-                out = attr.out_name if attr.alias else (
-                    f"val({attr.var})" if attr.var else "math")
+                out = _value_key(attr)
                 frame = nodes
                 for v in sorted(needed):
                     make, col = local[v]
@@ -3011,8 +3022,8 @@ class Executor:
         """``min|max|sum|avg(val(v))`` at ``level`` folded on the driver
         from v's driver map: per parent over the collected rows of v's
         level when v is defined one level below ``level`` or outside its
-        path, else one total for every node of ``level`` (the Spark plans
-        of _attr_output and _attr_value_df: query/query.go evalLevelAgg).
+        path, else one total for every node of ``level`` (the Spark plan
+        of _attr_value_df: query/query.go evalLevelAgg).
         None leaves it to Spark: v not bound on the driver, defined more
         than one level down, or values the driver does not fold (_fold)."""
         v = attr.val_var
@@ -3078,8 +3089,7 @@ class Executor:
         """A child block's output key; a repeated name renders under a
         marker field merged into one array by _clean (outputnode.go
         appends same-name children to one list)."""
-        name = cb.alias if cb.alias != cb.attr else (
-            ("~" if cb.reverse else "") + cb.attr)
+        name = _child_name(cb)
         n = used_names.get(name, 0)
         used_names[name] = n + 1
         return name if n == 0 else f"{name}#dgdup{n}"
@@ -3174,77 +3184,12 @@ class Executor:
                 # TestCountEmptyData3 expects [])
                 return None, "", False
             return self._count_per_parent(attr, nodes, out, level), out, False
-        if attr.name in _AGG_ATTRS and attr.val_var:
-            # level aggregation: aggregate descendant-defined var per this
-            # node; multi-level definitions propagate by summing along the
-            # intermediate levels first (transformTo), then the requested
-            # aggregate applies at the last hop (evalLevelAgg)
-            vdf = self.env.get(attr.val_var)
+        if attr.math is not None or (attr.val_var and (
+                attr.name == "val" or attr.name in _AGG_ATTRS)):
+            vdf = self._attr_value_df(attr, nodes, level)
             if vdf is None:
                 return None, "", False
-            out = out_name if attr.alias else f"{attr.name}(val({attr.val_var}))"
-            fn = {"min": F.min, "max": F.max, "sum": F.sum, "avg": F.avg}[attr.name]
-            chain = self._var_chain(attr.val_var, level)
-            if chain:
-                cur = vdf
-                for lvl in chain[:-1]:
-                    cur = (
-                        lvl.edges.select(SRC, DST)
-                        .join(cur.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
-                        .groupBy(SRC)
-                        .agg(F.sum(VALUE).alias(VALUE))
-                        .select(F.col(SRC).alias(SUBJECT), VALUE)
-                    )
-                last = chain[-1]
-                per_parent = (
-                    last.edges.select(SRC, DST)
-                    .join(cur.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
-                    .groupBy(SRC)
-                    .agg(fn(VALUE).alias(out))
-                    .select(F.col(SRC).alias(SUBJECT), out)
-                )
-                return per_parent, out, False
-            def_edges = self.var_edges.get(attr.val_var)
-            inrow = self.var_inrow.get(attr.val_var)
-            if (def_edges is not None and SRC in def_edges.columns
-                    and inrow and inrow in def_edges.columns):
-                per_parent = (
-                    def_edges.groupBy(SRC).agg(fn(inrow).alias(out))
-                    .select(F.col(SRC).alias(SUBJECT), out)
-                )
-                return per_parent, out, False
-            if def_edges is not None and SRC in def_edges.columns:
-                per_parent = (
-                    def_edges.select(SRC, DST)
-                    .join(vdf.select(F.col(SUBJECT).alias(DST), VALUE), DST, "inner")
-                    .groupBy(SRC)
-                    .agg(fn(VALUE).alias(out))
-                    .select(F.col(SRC).alias(SUBJECT), out)
-                )
-                return per_parent, out, False
-            # var defined at this level: aggregate whole map onto every node
-            total = vdf.agg(fn(VALUE).alias(out))
-            return nodes.crossJoin(F.broadcast(total)), out, False
-        if attr.val_var and attr.name == "val":
-            # val(v) output is a DIRECT map lookup by uid — path
-            # propagation (transformTo) applies only to math()/level-agg
-            # consumption at another level (query/query.go preTraverse
-            # reads Params.uidToVal[uid] verbatim)
-            vdf = self.env.get(attr.val_var)
-            if vdf is None:
-                return None, "", False
-            out = out_name if attr.alias else f"val({attr.val_var})"
-            return (
-                vdf.select(SUBJECT, F.col(VALUE).alias(out)),
-                out,
-                False,
-            )
-        if attr.math is not None:
-            vdf = self._math_value_df(attr, nodes, level)
-            # `v as math(...)` with no alias renders as val(v)
-            # (query/outputnode.go value-var key naming)
-            out = out_name if attr.alias else (
-                f"val({attr.var})" if attr.var else "math")
+            out = _value_key(attr)
             return vdf.select(SUBJECT, F.col(VALUE).alias(out)), out, False
         # plain scalar predicate
         name = attr.name
@@ -3462,14 +3407,10 @@ class Executor:
                             SUBJECT, F.col(VALUE).alias(src_col))
                         df = df.join(sdf, SUBJECT, "left")
                     dflt = f"{attr.name}({attr.agg_pred})"
-                fn = {"min": F.min, "max": F.max, "sum": F.sum, "avg": F.avg}[attr.name]
-                if ((attr.val_var and attr.val_var in self.var_bigfloat)
-                        or (attr.agg_pred and self.g.schema.has(attr.agg_pred)
-                            and self.g.schema.get(attr.agg_pred).typ == "bigfloat")):
-                    # 200-bit aggregation (functions/bigfloat.py)
-                    from dgraph_spark.functions.bigfloat import bigfloat_agg
-
-                    fn = bigfloat_agg(attr.name)
+                fn = _agg_fn(attr.name, bool(
+                    (attr.val_var and attr.val_var in self.var_bigfloat)
+                    or (attr.agg_pred and self.g.schema.has(attr.agg_pred)
+                        and self.g.schema.get(attr.agg_pred).typ == "bigfloat")))
                 out = attr.alias or dflt
                 aggs.append(fn(src_col).alias(out))
             else:
@@ -3854,6 +3795,25 @@ def _block_defines(b: Block) -> set[str]:
 
     walk(b)
     return out
+
+
+def _child_name(cb: Block) -> str:
+    """A child block's name in JSON and RDF output: its alias, else the
+    predicate, `~pred` for a reverse edge (query/outputnode.go
+    fieldName)."""
+    return cb.alias if cb.alias != cb.attr else ("~" if cb.reverse else "") + cb.attr
+
+
+def _value_key(a: Attr) -> str:
+    """Output key of a val(), aggregate or math() attr: its alias, else
+    `val(v)`, `sum(val(v))`, and `val(x)` for `x as math(...)`
+    (query/outputnode.go value-var key naming)."""
+    if a.alias:
+        return a.alias
+    if a.math is not None:
+        return f"val({a.var})" if a.var else "math"
+    return (f"val({a.val_var})" if a.name == "val"
+            else f"{a.name}(val({a.val_var}))")
 
 
 def _count_uid_only(b: Block) -> bool:

@@ -547,27 +547,21 @@ class FuncCompiler:
     def _uid(self, f: FuncCall) -> DataFrame:
         frames: list[DataFrame] = []
         lits: list[int] = []
-        bound = False
         for a in f.args:
             u = _uid_literal(a.value)
             if u is not None:
                 lits.append(u)
             elif str(a.value) in self.uids:
                 lits.extend(self.uids[str(a.value)])
-                bound = True
             else:
                 frames.append(self._uid_var(str(a.value)))
         if not lits and not frames:
             return self._empty_uids()  # vars bound to no uids
         if lits:
-            # inline literal relation (pure SQL, no Python-RDD round-trip);
-            # deduped driver-side so no distinct shuffle is needed below.
-            # A bound var's list (up to LITERAL_FRONTIER_MAX uids) is one
-            # parsed VALUES relation: F.lit costs a py4j call per uid
-            uniq = list(dict.fromkeys(lits))
-            lit_df = uid_frame(self.g.spark, uniq) if bound else self.g.spark.range(1).select(
-                F.explode(F.array(*[F.lit(u).cast("long") for u in uniq])).alias(SUBJECT)
-            )
+            # the query's literals and bound vars' lists as one parsed
+            # VALUES relation (F.lit costs a py4j call per uid), deduped
+            # driver-side so no distinct shuffle is needed below
+            lit_df = uid_frame(self.g.spark, list(dict.fromkeys(lits)))
             if not frames:
                 return lit_df
             frames.append(lit_df)

@@ -289,9 +289,9 @@ def test_rdf_inrow_child_attr(executor):
         '  ~in_nation (first: 3, orderdesc: c_acctbal) { c_name } } }')
     assert got == (
         '<0x20000000003> <n_name> "NATION_3" .\n'
-        '<0x20000000003> <in_nation> <0x30000000039> .\n'
-        '<0x20000000003> <in_nation> <0x30000000011> .\n'
-        '<0x20000000003> <in_nation> <0x30000000049> .\n'
+        '<0x20000000003> <~in_nation> <0x30000000039> .\n'
+        '<0x20000000003> <~in_nation> <0x30000000011> .\n'
+        '<0x20000000003> <~in_nation> <0x30000000049> .\n'
         '<0x30000000011> <c_name> "Customer#000000017" .\n'
         '<0x30000000039> <c_name> "Customer#000000057" .\n'
         '<0x30000000049> <c_name> "Customer#000000073" .\n')
@@ -324,6 +324,30 @@ def test_var_block_level_aggregates_match_duckdb(executor, key):
     assert node["total"] == pytest.approx(total, rel=1e-12)
     assert node["lo"] == lo and node["hi"] == hi
     assert node["mean"] == pytest.approx(mean, rel=1e-12)
+
+
+@pytest.mark.parametrize("key", [1, 2, 7])
+def test_two_level_aggregate_renders_what_var_binds(executor, key):
+    """sum/max(val(p)) over a var two levels down: p sums up to each
+    order (transformTo), then sum or max applies over the customer's
+    orders (evalLevelAgg). The rendered values and the vars t and m,
+    read on the same customer by another block, agree with DuckDB."""
+    u = uid_of("customer", key)
+    r = executor.execute(
+        f'{{ me(func: uid({u})) {{ placed {{ line {{ p as l_extendedprice }} }} '
+        f't as sum(val(p)) m as max(val(p)) }} '
+        f'q(func: uid({u})) {{ val(t) val(m) }} }}')
+    total, top = _duck(
+        "WITH per AS (SELECT o_orderkey, sum(l_extendedprice) s "
+        "FROM '{sf}/orders.parquet' JOIN '{sf}/lineitem.parquet' "
+        "ON l_orderkey = o_orderkey WHERE o_custkey = ? GROUP BY o_orderkey) "
+        "SELECT sum(s), max(s) FROM per", key)[0]
+    (me,) = r["me"]
+    (q,) = r["q"]
+    for got in (me["sum(val(p))"], q["val(t)"]):
+        assert got == pytest.approx(total, rel=1e-12)
+    for got in (me["max(val(p))"], q["val(m)"]):
+        assert got == pytest.approx(top, rel=1e-12)
 
 
 def test_uid_var_root_and_filter_match_duckdb(executor):

@@ -110,9 +110,10 @@ def test_golden_gate_cases_semijoin_frontier(golden_ex, monkeypatch):
 
 
 # Spark jobs of one point read with a paged child, run level at a time:
-# the root scan, its attribute read, the child edge scan plus its
-# per-parent window (two jobs under AQE), the child attribute read.
-POINT_READ_JOBS = 5
+# the root's attribute read, the child edge scan plus its per-parent
+# window (two jobs under AQE), the child attribute read. The root's
+# literal uid relation collects with no job.
+POINT_READ_JOBS = 4
 
 
 def test_point_read_job_bound(golden_ex, spark):
@@ -137,11 +138,11 @@ def test_point_read_job_bound(golden_ex, spark):
 
 
 # Spark jobs of a var block with a level aggregate and a root consumer:
-# the var block's two levels and its `age` read, the consumer's root and
-# its `name` read. Both aggregates fold on the driver from the var block's
-# bound vars; with a lazy var block the consumer's read re-ran the var's
-# plan (6 jobs).
-VAR_BLOCK_JOBS = 5
+# the var block's child level and its `age` read, the consumer's `name`
+# read. Both roots are literal uid relations, collected with no job, and
+# both aggregates fold on the driver from the var block's bound vars;
+# with a lazy var block the consumer's read re-ran the var's plan (6 jobs).
+VAR_BLOCK_JOBS = 3
 
 
 def test_var_block_job_bound(golden_ex, spark):
@@ -156,7 +157,7 @@ def test_var_block_job_bound(golden_ex, spark):
     assert len(jobs) <= VAR_BLOCK_JOBS, len(jobs)
     store = sc._jsc.sc().statusStore()
     assert {store.job(j).description().get() for j in jobs} == {
-        "var L0", "var L1", "q L0"}
+        "var L1", "q L0"}
 
 
 def test_golden_facets_cases(golden_facets_ex):
@@ -263,7 +264,10 @@ def test_rdf_job_bound(golden_ex, spark):
     each job carries its level's description."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
-    for name in ("val_math_child", "ordered_child"):
+    # the root's literal uid relation collects with no job; "q L0" is
+    # the root's attribute read
+    for name, descs in (("val_math_child", {"q L0", "q L1"}),
+                        ("ordered_child", {"q L1"})):
         q = RDF_PINS[name][0]
         ex = golden_ex()
         ex.execute(q)  # plan-cache and JIT warm-up
@@ -271,7 +275,7 @@ def test_rdf_job_bound(golden_ex, spark):
         rdf = _group_jobs(sc, f"golden-rdf-{name}", lambda: ex.execute_rdf(q))
         js = _group_jobs(sc, f"golden-json-{name}", lambda: ex.execute(q))
         assert len(rdf) <= len(js), (name, len(rdf), len(js))
-        assert {store.job(j).description().get() for j in rdf} == {"q L0", "q L1"}
+        assert {store.job(j).description().get() for j in rdf} == descs
     q = "{ q(func: uid(0x1)) { name friend (first: 1, orderdesc: age) { name } } }"
     ex = golden_ex()
     ex.execute_rdf(q)

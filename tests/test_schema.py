@@ -151,6 +151,34 @@ def test_bigfloat_math_ceil_floor_sqrt(spark):
     assert got2["me"][0]["f"] == Decimal(2)
 
 
+def test_bigfloat_level_aggregate_renders_what_var_binds(spark):
+    """A level aggregate over a bigfloat var runs at 200 bits where it
+    renders, and renders the value its own var binds (val(t) below)."""
+    from decimal import Decimal
+
+    from dgraph_spark.plans import Executor
+
+    g = _bigfloat_graph(spark, [
+        '<0x666> <friend> <0x777> .',
+        '<0x666> <friend> <0x888> .',
+        '<0x777> <amount> "100" .',
+        '<0x888> <amount> "99.0000000000000000000001" .',
+    ], _BF_SCHEMA + "\nfriend: [uid] .")
+    got = Executor(g).execute(
+        '{ me(func: uid(0x666)) { friend { a as amount } '
+        '  t as sum(val(a)) m as max(val(a)) } '
+        '  q(func: uid(0x666)) { val(t) val(m) } }')
+    (me,) = got["me"]
+    assert me["sum(val(a))"] == Decimal("199.0000000000000000000001")
+    assert me["max(val(a))"] == Decimal("100")
+    assert got["q"] == [{"val(t)": me["sum(val(a))"],
+                         "val(m)": me["max(val(a))"]}]
+    # math() at the parent reads a summed up to it, at 200 bits too
+    got = Executor(g).execute(
+        '{ me(func: uid(0x666)) { friend { a as amount } s: math(a * 2) } }')
+    assert got["me"][0]["s"] == Decimal("398.0000000000000000000002")
+
+
 def test_bigfloat_rdf_writes_lexical_text(spark):
     """RDF writes a bigfloat's stored lexical text, where JSON renders
     the decimal that round-trips it."""
